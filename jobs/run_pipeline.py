@@ -32,7 +32,7 @@ def main() -> None:
     ap.add_argument("--checkpoint-buckets", type=int, default=0)
     ap.add_argument("--strategy", default="drain",
                     choices=["drain", "spell", "iplom", "lenma", "ael",
-                             "logmine", "shiso", "lke", "molfi"])
+                             "logmine", "shiso", "lke", "molfi", "logsig"])
     ap.add_argument("--stream", action="store_true",
                     help="continuous-ingest mode: mine templates from a batch "
                          "read of --input, then run the streaming "

@@ -7,12 +7,15 @@ reference, ≈L55–88/L167–187) — no generalization happens here, so the
 operation is embarrassingly parallel, order-insensitive, and deterministic.
 
 Vectorization: within each Arrow batch, masked texts are factorized and
-each *unique* text is matched once; per-row work is a dictionary-codes
-take.  A worker-global memo cache persists matches across batches, so hot
+each *unique* text is matched once; ``template``/``event_id``/``matched``
+are a numpy take of the per-unique results by the factorize codes.  A
+worker-global memo cache persists matches across batches, so hot
 templates cost one tree walk per executor, not per row.  Parameter
-extraction compiles one regex per template (reference
-``get_parameter_list`` quirks preserved — see
-:func:`logparser_spark.drain.template_to_param_regex`).
+extraction is one pass over the batch: each unique text's template
+regex is resolved once (compiled once per template — reference
+``get_parameter_list`` quirks preserved, see
+:func:`logparser_spark.drain.template_to_param_regex`), then every row
+runs one ``search`` of its raw text and strips the groups.
 """
 
 from __future__ import annotations
@@ -44,8 +47,8 @@ ASSIGN_FIELDS = [
 
 
 class _BaseMatcher:
-    """Shared matcher plumbing: memoization + vectorized per-template
-    parameter extraction. Subclasses implement ``match_unique``."""
+    """Shared matcher plumbing: memoization + per-row parameter
+    extraction. Subclasses implement ``match_unique``."""
 
     def __init__(self, templates: list[str], with_params: bool):
         self.with_params = with_params
@@ -62,32 +65,23 @@ class _BaseMatcher:
             self.param_rx[template] = template_to_param_regex(template)
         return self.param_rx[template]
 
-    def extract_params_vectorized(
-        self, texts: pd.Series, codes, results: list
-    ) -> pd.Series:
-        """Per-template vectorized extraction: one C-regex pass per
-        template in the batch via ``str.extract`` instead of per-row
-        Python ``findall`` (reference semantics preserved — groups are
-        the ``<*>`` positions of the final template, stripped)."""
-        out = pd.Series([[] for _ in range(len(texts))], index=texts.index, dtype=object)
+    def extract_params(self, texts: pd.Series, codes: np.ndarray, rows: list) -> list:
+        """Per-row parameters in one pass over the batch: each unique
+        text's template regex is resolved once, then each row runs one
+        ``search`` of its text and strips the groups (reference
+        semantics — groups are the ``<*>`` positions of the final
+        template).  ``rows`` holds (template, event_id, matched) per
+        factorize code.  Unmatched rows, parameter-less templates and
+        null texts give ``[]``."""
         if not self.with_params:
-            return out
-        # group rows by *template* (small), not by unique text (large)
-        tpl_of_code = np.array(
-            [r[0] if r[2] else None for r in results], dtype=object
+            return [[] for _ in range(len(codes))]
+        rx_of_code = np.array(
+            [self.regex_for(tpl) if ok else None for tpl, _, ok in rows], dtype=object
         )
-        tpl_s = pd.Series(tpl_of_code[codes], index=texts.index)
-        for template, idx in tpl_s.groupby(tpl_s).groups.items():
-            rx = self.regex_for(template)
-            if rx is None:
-                continue
-            ext = texts.loc[idx].str.extract(rx)
-            vals = ext.apply(lambda col: col.str.strip())
-            lists = [
-                [] if any(p is None or p != p for p in row) else list(row)
-                for row in vals.itertuples(index=False, name=None)
-            ]
-            out.loc[idx] = pd.Series(lists, index=idx, dtype=object)
+        out = []
+        for text, rx in zip(texts, rx_of_code.take(codes)):
+            m = rx.search(text) if rx is not None and isinstance(text, str) else None
+            out.append([g.strip() for g in m.groups()] if m else [])
         return out
 
 
@@ -414,12 +408,18 @@ def _match_batch(matcher: _Matcher, masked: pd.Series, text: pd.Series) -> pd.Da
         idx = [i for i, r in enumerate(results) if r is None]
         for i, res in zip(idx, matcher.match_unique(uniques[idx])):
             results[i] = res
+    # per-unique columns plus a trailing unmatched sentinel that code -1
+    # (null masked text) takes; each per-row column is one numpy take
+    rows = results + [(None, None, False)]
+    template = np.array([r[0] for r in rows], dtype=object)
+    event_id = np.array([r[1] for r in rows], dtype=object)
+    matched = np.array([r[2] for r in rows], dtype=bool)
     return pd.DataFrame(
         {
-            "template": pd.array([results[c][0] for c in codes], dtype=object),
-            "event_id": pd.array([results[c][1] for c in codes], dtype=object),
-            "parameters": matcher.extract_params_vectorized(text, codes, results),
-            "matched": pd.array([results[c][2] for c in codes], dtype=bool),
+            "template": template.take(codes),
+            "event_id": event_id.take(codes),
+            "parameters": matcher.extract_params(text, codes, rows),
+            "matched": matched.take(codes),
         },
         index=masked.index,
     )

@@ -8,6 +8,8 @@ Lifecycle (SURVEY §3.4) — one Spark application, shuffles annotated::
          → assign (broadcast tree, Arrow batches)   no shuffle
          → enrich (broadcast joins)                 no shuffle
          → route  (partitionBy fan-out write)       shuffle #2 (write-side)
+         → commit (manifest rows from a read-back)  one job; routed_rows is
+                                                    observed on it, no re-count
          → aggregate (two-stage salted counts)      shuffles #3a/#3b
 
 Resume: committed ckpt_buckets are skipped; the frozen template set is
@@ -20,7 +22,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from logparser_spark.config import PipelineConfig
@@ -64,8 +66,11 @@ def run_pipeline(
     """Run (or resume) the full pipeline into ``out_dir``.
 
     ``strategy`` selects the mining/matching engine (drain, spell,
-    iplom, lenma, ael, logmine, shiso, lke); the frozen-template contract and resume
-    protocol are engine-independent (templates are plain strings).
+    iplom, lenma, ael, logmine, shiso, lke, molfi, logsig); the
+    frozen-template contract and resume protocol are engine-independent
+    (templates are plain strings).  ``routed_rows`` counts the rows of
+    the buckets this run wrote, or of the whole table when every bucket
+    was already committed.
     ``fail_after_buckets`` is a test hook: commit only the first k buckets'
     manifests then raise, simulating a mid-run death *after* partial
     output landed (SURVEY §5.2 resume test).
@@ -125,7 +130,6 @@ def run_pipeline(
     if "masked" in routed.columns:  # derived column — not persisted
         routed = routed.drop("masked")
 
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     # third key de-skews within (bucket, sink): a dominant conversation
     # must not serialize one write task (same guard as route_write)
     sub_buckets = max(cfg.num_partitions // 8, 1)
@@ -138,36 +142,41 @@ def run_pipeline(
         )
         .write.format(cfg.sink_format)
         .mode("overwrite")
+        # scoped to this write: the caller's session keeps its mode
+        .option("partitionOverwriteMode", "dynamic")
         .partitionBy("ckpt_bucket", "sink_id")
         .save(routed_path)
     )
 
     # -- commit manifests from read-back (ledger describes what's on disk) --
     wall = time.time() - t0
-    on_disk = spark.read.format(cfg.sink_format).load(routed_path).filter(
-        F.col("ckpt_bucket").isin([int(b) for b in todo])
-    )
     commit = todo if fail_after_buckets is None else todo[:fail_after_buckets]
-    metrics = M.bucket_metrics(
-        on_disk.filter(F.col("ckpt_bucket").isin([int(b) for b in commit])), run_id, wall
+    on_disk = spark.read.format(cfg.sink_format).load(routed_path).filter(
+        F.col("ckpt_bucket").isin([int(b) for b in commit])
     )
-    M.write_manifest_rows(metrics, out_dir)
+    metrics = M.bucket_metrics(on_disk, run_id, wall)
+    # routed_rows comes with the manifest write, not from a re-scan
+    obs = Observation()
+    M.write_manifest_rows(
+        metrics.observe(obs, F.sum("routed_rows").alias("routed_rows")), out_dir
+    )
     result.buckets_done = list(commit)
     if fail_after_buckets is not None and len(commit) < len(todo):
         raise RuntimeError(
             f"injected failure after committing {len(commit)}/{len(todo)} buckets"
         )
 
-    result.routed_rows = on_disk.count()
+    result.routed_rows = obs.get["routed_rows"] or 0
     result.wall_sec = time.time() - t0
     return result
 
 
 def aggregates_from_routed(spark: SparkSession, result: PipelineResult,
                            cfg: PipelineConfig | None = None) -> tuple[DataFrame, DataFrame]:
-    """Final per-sink windowed aggregates over the committed routed table."""
+    """Final per-sink windowed aggregates over the committed routed table
+    (the buckets ``result`` found committed or committed itself)."""
     cfg = cfg or PipelineConfig()
     routed = spark.read.format(cfg.sink_format).load(result.routed_path)
-    committed = M.committed_buckets(spark, result.out_dir)
+    committed = set(result.buckets_done) | set(result.buckets_skipped)
     routed = routed.filter(F.col("ckpt_bucket").isin([int(b) for b in committed]))
     return sink_window_counts(routed, cfg), turn_window_counts(routed, cfg)

@@ -7,6 +7,7 @@ ever drops it, covering left-join null handling.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 LKP_ROLE_ROWS = [
@@ -27,9 +28,17 @@ LKP_TOOL_ROWS = [
 LKP_TOOL_SCHEMA = "tool string, tool_family string, is_privileged boolean"
 
 
+def _local_df(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A JVM local relation (plans as ``LocalTableScan``).  A Python list
+    would become a Python RDD (``Scan ExistingRDD``), so every broadcast
+    of the dim would first run a job on Python workers."""
+    names = [f.split()[0] for f in schema.split(",")]
+    return spark.createDataFrame(pa.table(list(zip(*rows)), names=names), schema)
+
+
 def lkp_role_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(LKP_ROLE_ROWS, LKP_ROLE_SCHEMA)
+    return _local_df(spark, LKP_ROLE_ROWS, LKP_ROLE_SCHEMA)
 
 
 def lkp_tool_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(LKP_TOOL_ROWS, LKP_TOOL_SCHEMA)
+    return _local_df(spark, LKP_TOOL_ROWS, LKP_TOOL_SCHEMA)

@@ -39,12 +39,14 @@ def test_full_run_then_noop_resume(spark, tdf):
         assert r1.routed_rows == N
         assert sorted(r1.buckets_done) == list(range(CFG.checkpoint_buckets))
         first = _routed_rows(spark, out)
+        assert r1.routed_rows == len(first)  # observed count = on-disk count
 
         # resume over a complete output is a no-op and changes nothing
         r2 = run_pipeline(spark, tdf, out, CFG)
         assert r2.buckets_done == []
         assert r2.buckets_skipped == list(range(CFG.checkpoint_buckets))
         assert _routed_rows(spark, out).equals(first)
+        assert r2.routed_rows == len(first)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -61,8 +63,9 @@ def test_kill_and_resume_is_exact(spark, tdf, rebalance):
     ref_out = tempfile.mkdtemp(prefix="pipe_ref_")
     out = tempfile.mkdtemp(prefix="pipe_kill_")
     try:
-        run_pipeline(spark, tdf, ref_out, cfg)
+        r_ref = run_pipeline(spark, tdf, ref_out, cfg)
         want = _routed_rows(spark, ref_out)
+        assert r_ref.routed_rows == len(want)
 
         # die after committing 3 of 8 buckets (output partially on disk)
         with pytest.raises(RuntimeError, match="injected failure"):
@@ -72,6 +75,11 @@ def test_kill_and_resume_is_exact(spark, tdf, rebalance):
         # resume: remaining buckets processed, template set reused
         r2 = run_pipeline(spark, tdf, out, cfg)
         assert len(r2.buckets_done) == 5
+        # routed_rows counts the rows of the buckets this run wrote
+        resumed = spark.read.parquet(f"{out}/routed").filter(
+            F.col("ckpt_bucket").isin(r2.buckets_done)
+        )
+        assert r2.routed_rows == resumed.count()
         got = _routed_rows(spark, out)
         assert got.equals(want)              # byte-identical routed rows
         assert len(got) == N                 # no dupes, no losses
@@ -96,4 +104,19 @@ def test_manifest_lineage_and_metrics(spark, tdf):
         swc, twc = aggregates_from_routed(spark, run_pipeline(spark, tdf, out, CFG), CFG)
         assert twc.agg(F.sum("n_turns")).first()[0] == N
     finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_pipeline_leaves_session_overwrite_mode_alone(spark, tdf):
+    """Dynamic partition overwrite is an option of the routed write, not
+    a session setting left behind for the caller."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    out = tempfile.mkdtemp(prefix="pipe_conf_")
+    spark.conf.set(key, "STATIC")
+    try:
+        cfg = PipelineConfig(num_partitions=4, checkpoint_buckets=2)
+        assert run_pipeline(spark, tdf, out, cfg).routed_rows == N
+        assert spark.conf.get(key) == "STATIC"
+    finally:
+        spark.conf.unset(key)
         shutil.rmtree(out, ignore_errors=True)

@@ -70,6 +70,57 @@ def test_assignment_matcher_agrees_with_oracle(lines):
         assert eid == rec["event_id"]
 
 
+# parameter-extraction edge shapes: regex metacharacters, short ``<..>``
+# tokens (normalized to ``<*>`` by the param regex) and runs of spaces,
+# leading and trailing ones included (captured, then stripped)
+param_token = st.one_of(
+    token,
+    st.sampled_from(["a.b", "(x)", "[y]", "$z", "^", "a+b*", "\\d", "?", "|",
+                     "{1}", "<id>", "<ab>", "<*>", "<toolong>"]),
+)
+spaces = st.sampled_from(["", " ", "  ", "   "])
+
+
+def _spaced(parts) -> str:
+    lead, toks = parts
+    body = "".join(t + (sep or " ") for t, sep in toks[:-1])
+    last, trail = toks[-1]
+    return lead + body + last + trail
+
+
+spaced_line = st.tuples(
+    spaces, st.lists(st.tuples(param_token, spaces), min_size=1, max_size=10)
+).map(_spaced)
+
+
+@given(st.lists(spaced_line, min_size=1, max_size=40))
+@settings(max_examples=60, deadline=None, derandomize=True)
+def test_batch_params_equal_rowwise_extract(lines):
+    """``_match_batch`` with parameters gives, per row, exactly the
+    row-wise reference extraction for matched rows and ``[]`` otherwise;
+    a null text comes back unmatched with no parameters."""
+    import pandas as pd
+
+    from logparser_spark.drain import extract_parameters
+    from logparser_spark.operators.assign import _Matcher, _match_batch
+
+    _recs, clusters = parse_sequential(lines)
+    # a template outside the batch leaves some rows unmatched
+    templates = sorted({c.template for c in clusters} - {clusters[0].template})
+    matcher = _Matcher(templates, DrainParams(), True)
+    texts = pd.Series([*lines, None], dtype=object)
+    masked = pd.Series([mask_text(t, PATTERNS) for t in lines] + [None], dtype=object)
+    out = _match_batch(matcher, masked, texts)
+    assert out.index.equals(masked.index)
+    for text, row in zip(texts, out.itertuples(index=False)):
+        if row.matched:
+            assert row.parameters == extract_parameters(text, row.template)
+        else:
+            assert row.parameters == []
+    assert not out["matched"].iloc[-1]
+    assert out["template"].iloc[-1] is None
+
+
 @given(st.lists(line, min_size=1, max_size=30), st.randoms())
 @settings(max_examples=50, deadline=None, derandomize=True)
 def test_merge_is_permutation_invariant(lines, rnd):
