@@ -266,14 +266,8 @@ def run_bench(sf_dir: str, cpus: int, n_turns_override: int = 0,
     # Iceberg) scales with executors; a single local block device does not,
     # so RAM-backed output isolates compute scaling from the one disk.
     out_dir = tempfile.mkdtemp(prefix="bench_route_", dir=_local_dirs())
-    # SPARK_GRAFT_TPLMAP=1 -> ship NULL templates through the write-side
-    # shuffle, re-derive post-shuffle from the broadcast KB (A/B lever)
-    tpl_kb = mined if os.environ.get("SPARK_GRAFT_TPLMAP") == "1" else None
     try:
-        timed(
-            "assign_enrich_route_write",
-            lambda: route_write(routed, out_dir, cfg, templates=tpl_kb),
-        )
+        timed("assign_enrich_route_write", lambda: route_write(routed, out_dir, cfg))
         back = spark.read.parquet(out_dir)
         timed(
             "aggregate_sink_windows",

@@ -19,6 +19,8 @@ import json
 
 
 def main() -> None:
+    from logparser_spark.operators.mine import STRATEGIES
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--dataset", action="append", required=True,
                     help="dataset name from BENCHMARK_SETTINGS (repeatable)")
@@ -28,9 +30,7 @@ def main() -> None:
                     help="loghub structured CSV with LineId,EventId (repeatable; "
                          "'' to skip a position)")
     ap.add_argument("--out", help="also write <name>_structured/_templates.csv here")
-    ap.add_argument("--strategy", default="drain",
-                    choices=["drain", "spell", "iplom", "lenma", "ael",
-                             "logmine", "shiso", "lke", "logsig", "molfi"])
+    ap.add_argument("--strategy", default="drain", choices=STRATEGIES)
     ap.add_argument("--logsig-k", type=int, default=0,
                     help="event count k for --strategy logsig (required there)")
     ap.add_argument("--num-partitions", type=int, default=0)

@@ -49,11 +49,6 @@ class PipelineConfig:
     #: number of sink buckets derived from template id (route fan-out is
     #: sink_id = role × template-bucket)
     template_sink_buckets: int = 8
-    #: route write shuffle: AQE rebalance hint (runtime-split oversized /
-    #: coalesce empty write partitions) instead of a fixed hash
-    #: repartition — hash-packing (sink, sub_bucket) groups into a fixed
-    #: count leaves write tasks empty/oversized and caps slot occupancy
-    route_rebalance: bool = True
     #: event-time tumbling window size for aggregates
     window_duration: str = "1 hour"
     #: turn-index tumbling bucket width for (conv_id, turn_idx) windows

@@ -35,7 +35,7 @@ from logparser_spark.drain import (
     event_id_of,
     template_to_param_regex,
 )
-from logparser_spark.operators.mine import with_masked
+from logparser_spark.operators.mine import check_strategy, with_masked
 
 ASSIGN_FIELDS = [
     T.StructField("masked", T.StringType()),
@@ -444,6 +444,7 @@ def assign_templates(
     cosine), or ``iplom``/``ael`` (constant-position compatibility,
     most-specific wins).
     """
+    check_strategy(strategy)
     params = params or DrainParams()
     if "masked" not in df.columns:
         df = with_masked(df, params)

@@ -39,6 +39,17 @@ from logparser_spark.functions.masking import mask_expr
 #: the driver-side volume is bounded by the corpus' unique-masked-text
 #: cardinality and must be guarded (see ``unique_cap``).
 BATCH_STRATEGIES = ("iplom", "ael", "logmine", "lke", "logsig", "molfi")
+#: every strategy ``mine_templates`` / ``assign_templates`` accept
+STRATEGIES = ("drain", "spell", "lenma", "shiso", *BATCH_STRATEGIES)
+
+
+def check_strategy(strategy: str) -> None:
+    """Fail on an unknown strategy name before any Spark job runs (the
+    dispatch chains would otherwise fall through to Drain)."""
+    if strategy not in STRATEGIES:
+        raise ValueError(
+            f"unknown strategy {strategy!r}; expected one of {STRATEGIES}"
+        )
 
 
 def with_masked(df: DataFrame, params: DrainParams) -> DataFrame:
@@ -140,6 +151,7 @@ def mine_templates(
     no guard — they collect per-partition *template sets*, which their
     trees compress regardless of input cardinality.
     """
+    check_strategy(strategy)
     cfg = cfg or PipelineConfig()
     params = cfg.drain
     if "masked" not in df.columns:

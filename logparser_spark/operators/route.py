@@ -35,25 +35,17 @@ def with_sink_id(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     return df.withColumn("sink_id", sink)
 
 
-def route_write(df: DataFrame, path: str, cfg: PipelineConfig | None = None,
-                mode: str = "overwrite", templates: list | None = None) -> None:
-    """One-pass fan-out write.
+def route_write(df: DataFrame, path: str, cfg: PipelineConfig | None = None) -> None:
+    """One-pass fan-out write, partitioned by ``ckpt_bucket`` (when the
+    frame carries the resume bucket) and then ``sink_id``.
 
-    The repartition clusters rows by sink (plus a conv_id sub-bucket to
-    keep parallelism when one sink dominates) so each task writes ~1 sink
-    directory instead of every task writing every sink — the standard fix
-    for the dynamic-partition small-files explosion: files scale with
-    tasks, not tasks × sinks.
-
-    ``templates`` (the mined KB, or plain template strings) enables the
-    shuffle-payload optimization: matched rows ship a NULL template
-    through the write-side shuffle and re-derive the string after it from
-    a broadcast (event_id → template) map — a KB-sized dim by
-    construction.  Unmatched rows keep their literal template (it is
-    their masked text, per-row unique, so it can't come from any bounded
-    map).  The broadcast hash join preserves the sink clustering, so the
-    written rows and file layout are identical either way; only shuffle
-    bytes change.
+    An AQE REBALANCE on the partition columns clusters rows so each task
+    writes ~1 directory instead of every task writing every directory —
+    files scale with tasks, not tasks × sinks.  AQE's skew split carves
+    an oversized sink across tasks by mapper ranges, so a dominant
+    conversation cannot pin one write task, and small sinks coalesce
+    together.  Overwrite is dynamic and scoped to this write: only the
+    partitions written are replaced, and the session conf is untouched.
     """
     cfg = cfg or PipelineConfig()
     if "sink_id" not in df.columns:
@@ -62,81 +54,12 @@ def route_write(df: DataFrame, path: str, cfg: PipelineConfig | None = None,
     # the write-side shuffle or persist it to sinks
     if "masked" in df.columns:
         df = df.drop("masked")
-    tpl_map = None
-    if (
-        templates is not None
-        and {"template", "event_id", "matched"} <= set(df.columns)
-    ):
-        from logparser_spark.drain import event_id_of
-
-        tpls = sorted(
-            {getattr(t, "template", t) for t in templates}
-        )
-        tpl_map = df.sparkSession.createDataFrame(
-            [(event_id_of(t), t) for t in tpls], "event_id string, _tpl string"
-        )
-        df = df.withColumn(
-            "template",
-            F.when(F.col("matched"), F.lit(None).cast("string")).otherwise(
-                F.col("template")
-            ),
-        )
-    # sub-bucket on (conv_id, turn_idx), not conv_id alone: a dominant
-    # conversation would otherwise land in one write task and become the
-    # stage straggler (its sink would also produce one giant file)
-    if cfg.route_rebalance:
-        # AQE REBALANCE(sink_id) instead of a fixed hash repartition:
-        # perfect sink clustering, and AQE's skew-split carves an
-        # oversized sink across tasks by mapper ranges (the runtime
-        # version of the manual sub-bucket trick, no extra shuffled
-        # column) while coalescing small sinks together. Hash-packing
-        # (sink, sub_bucket) keys into a fixed partition count left
-        # write tasks empty or at 2x the median — event-log measured
-        # occupancy 0.80 at 8 slots, the cap on write-stage scaling.
-        clustered = df.hint("rebalance", "sink_id")
-    else:
-        sub_buckets = max(cfg.num_partitions // 8, 1)
-        clustered = df.repartition(
-            cfg.num_partitions,
-            F.col("sink_id"),
-            F.pmod(F.hash("conv_id", "turn_idx"), F.lit(sub_buckets)),
-        )
-    if tpl_map is not None:
-        # Fail fast on KB coverage gaps: ``templates`` must cover every
-        # MATCHED event_id (i.e. be the exact KB assign_templates used) —
-        # a stale/partial KB would otherwise persist NULL template
-        # strings silently.  raise_error sits in the unreachable branch
-        # of the coalesce, so the check costs nothing on the happy path
-        # and aborts the write job loudly on the first uncovered row.
-        cols = clustered.columns
-        clustered = (
-            clustered.join(F.broadcast(tpl_map), "event_id", "left")
-            .withColumn(
-                "template",
-                F.when(~F.col("matched"), F.col("template")).otherwise(
-                    F.coalesce(
-                        "_tpl",
-                        F.raise_error(
-                            F.concat(
-                                F.lit(
-                                    "route_write: templates KB does not cover "
-                                    "matched event_id "
-                                ),
-                                F.col("event_id"),
-                                F.lit(
-                                    " — pass the exact KB used by "
-                                    "assign_templates"
-                                ),
-                            )
-                        ),
-                    )
-                ),
-            )
-            .select(*cols)
-        )
+    parts = [c for c in ("ckpt_bucket", "sink_id") if c in df.columns]
     (
-        clustered.write.format(cfg.sink_format)
-        .mode(mode)
-        .partitionBy("sink_id")
+        df.hint("rebalance", *parts)
+        .write.format(cfg.sink_format)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*parts)
         .save(path)
     )

@@ -7,7 +7,8 @@ Lifecycle (SURVEY §3.4) — one Spark application, shuffles annotated::
          → merge templates (driver, KBs)            collect (tiny)
          → assign (broadcast tree, Arrow batches)   no shuffle
          → enrich (broadcast joins)                 no shuffle
-         → route  (partitionBy fan-out write)       shuffle #2 (write-side)
+         → route  (REBALANCE(ckpt_bucket, sink_id)  shuffle #2 (write-side)
+                   partitionBy fan-out write)
          → commit (manifest rows from a read-back)  one job; routed_rows is
                                                     observed on it, no re-count
          → aggregate (two-stage salted counts)      shuffles #3a/#3b
@@ -31,7 +32,7 @@ from logparser_spark.operators.aggregate import sink_window_counts, turn_window_
 from logparser_spark.operators.assign import assign_templates
 from logparser_spark.operators.enrich import enrich
 from logparser_spark.operators.mine import mine_templates
-from logparser_spark.operators.route import with_sink_id
+from logparser_spark.operators.route import route_write
 from logparser_spark.plans import manifest as M
 
 
@@ -126,27 +127,7 @@ def run_pipeline(
 
     assigned = assign_templates(pending, clusters, cfg.drain, strategy=strategy)
     enriched = enrich(assigned, lkp_role, lkp_tool)
-    routed = with_sink_id(enriched, cfg)
-    if "masked" in routed.columns:  # derived column — not persisted
-        routed = routed.drop("masked")
-
-    # third key de-skews within (bucket, sink): a dominant conversation
-    # must not serialize one write task (same guard as route_write)
-    sub_buckets = max(cfg.num_partitions // 8, 1)
-    (
-        routed.repartition(
-            cfg.num_partitions,
-            F.col("ckpt_bucket"),
-            F.col("sink_id"),
-            F.pmod(F.hash("conv_id", "turn_idx"), F.lit(sub_buckets)),
-        )
-        .write.format(cfg.sink_format)
-        .mode("overwrite")
-        # scoped to this write: the caller's session keeps its mode
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("ckpt_bucket", "sink_id")
-        .save(routed_path)
-    )
+    route_write(enriched, routed_path, cfg)
 
     # -- commit manifests from read-back (ledger describes what's on disk) --
     wall = time.time() - t0

@@ -35,10 +35,16 @@ def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
 
 
 def streaming_assign(
-    stream: DataFrame, clusters: list[Cluster], cfg: PipelineConfig | None = None
+    stream: DataFrame,
+    clusters: list[Cluster],
+    cfg: PipelineConfig | None = None,
+    strategy: str = "drain",
 ) -> DataFrame:
+    """Assign with the matcher of the ``strategy`` that mined ``clusters``."""
     cfg = cfg or PipelineConfig()
-    assigned = assign_templates(stream, clusters, cfg.drain, with_params=False)
+    assigned = assign_templates(
+        stream, clusters, cfg.drain, with_params=False, strategy=strategy
+    )
     return with_sink_id(assigned, cfg)
 
 
@@ -174,11 +180,13 @@ def streaming_route_write(
     continuous one-pass fan-out of routed rows into per-sink parquet
     directories.
 
-    Same plan shape as the batch writer: rows cluster by
-    ``(sink_id, hash(conv_id, turn_idx) sub-bucket)`` before the
-    partitioned sink, so each micro-batch task writes ~1 sink directory
-    (files per trigger scale with tasks, not tasks × sinks) and a
-    dominant conversation cannot pin one write task.  The
+    Rows cluster by a fixed hash of ``(sink_id, hash(conv_id, turn_idx)
+    sub-bucket)`` before the partitioned sink, so each micro-batch task
+    writes ~1 sink directory (files per trigger scale with tasks, not
+    tasks × sinks).  The batch writer's REBALANCE is not used here:
+    micro-batches run without AQE, so nothing would split an oversized
+    sink at runtime, and the sub-bucket is what keeps a dominant
+    conversation from pinning one write task.  The
     ``checkpointLocation`` gives exactly-once parquet appends per
     micro-batch; restarting from the same checkpoint skips committed
     batches — the streaming analog of the batch resume ledger.

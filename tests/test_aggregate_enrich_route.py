@@ -27,37 +27,6 @@ def routed(spark):
     return with_sink_id(enriched, CFG).cache()
 
 
-def test_route_write_template_map_optimization_byte_equal(spark, tmp_path):
-    """route_write(templates=KB) ships NULL templates through the
-    write-side shuffle and re-derives them from the broadcast KB after
-    it — the persisted rows must be identical to the plain path, for
-    matched AND unmatched rows (unmatched keep their literal template)."""
-    from logparser_spark.operators.route import route_write
-
-    cfg = PipelineConfig(num_partitions=4)
-    tdf = transcripts_df(spark, 1500, 12, 0)
-    mined = mine_templates(tdf, cfg)
-    # drop clusters so length-mismatched rows become unmatched (their
-    # template is then the per-row masked text, not in any KB)
-    partial_kb = mined[: max(len(mined) // 2, 1)]
-    assigned = assign_templates(tdf, partial_kb, cfg.drain)
-    routed = with_sink_id(
-        enrich(assigned, lkp_role_df(spark), lkp_tool_df(spark)), cfg
-    )
-    assert routed.filter("NOT matched").count() > 0
-
-    plain, mapped = str(tmp_path / "plain"), str(tmp_path / "mapped")
-    route_write(routed, plain, cfg)
-    route_write(routed, mapped, cfg, templates=partial_kb)
-    a, b = spark.read.parquet(plain), spark.read.parquet(mapped)
-    assert sorted(a.columns) == sorted(b.columns)
-    cols = sorted(a.columns)
-    assert a.select(*cols).exceptAll(b.select(*cols)).count() == 0
-    assert b.select(*cols).exceptAll(a.select(*cols)).count() == 0
-    assert a.filter("template IS NULL").count() == 0
-    assert b.filter("template IS NULL").count() == 0
-
-
 def test_route_write_sink_format_pluggable(spark, routed, tmp_path):
     """``cfg.sink_format`` is a real seam, not a constant: the same
     routed frame written as ORC (Spark's other built-in columnar

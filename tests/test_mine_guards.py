@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from logparser_spark.operators.assign import assign_templates
 from logparser_spark.operators.mine import mine_templates
 
 
@@ -40,6 +41,14 @@ def test_batch_kernel_unique_cap_auto_sample(spark):
     # fit still returns templates over it
     assert clusters
     assert sum(c.count for c in clusters) < 3000
+
+
+def test_unknown_strategy_fails_before_falling_back_to_drain(spark):
+    df = _masking_miss_corpus(spark, n=10)
+    with pytest.raises(ValueError, match="unknown strategy 'Spell'.*'drain'"):
+        mine_templates(df, strategy="Spell")
+    with pytest.raises(ValueError, match="unknown strategy 'Spell'.*'drain'"):
+        assign_templates(df, [], strategy="Spell")
 
 
 def test_online_kernels_unaffected_by_cap(spark):

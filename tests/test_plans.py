@@ -7,6 +7,8 @@ broadcast, aggregation is partial+final, and assignment adds no shuffle.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -190,25 +192,29 @@ def test_curation_narrow_ops_add_no_exchange(spark):
         assert "Python" not in plan
 
 
-def test_route_write_plan_uses_rebalance(spark):
-    """route_rebalance=True must plan a rebalance exchange (AQE splits
-    oversized sinks / coalesces small ones at runtime), not a fixed
-    round-robin or user-pinned hash repartition."""
-    from logparser_spark.config import PipelineConfig
-    from logparser_spark.operators.enrich import enrich as _enrich
-    from logparser_spark.operators.route import with_sink_id
+def test_route_write_plan_uses_rebalance(spark, tmp_path, monkeypatch):
+    """The shipped job's one save is the routed write, and it plans an
+    AQE REBALANCE on its partition columns (AQE splits oversized sinks /
+    coalesces small ones at runtime), not a fixed hash repartition."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from logparser_spark.plans.pipeline import run_pipeline
     from logparser_spark.sources.transcripts import transcripts_df
 
-    cfg = PipelineConfig(num_partitions=8)
-    tdf = transcripts_df(spark, 2000, 20, 0)
-    routed = with_sink_id(
-        tdf.withColumn("event_id", F.lit("e")).withColumn("matched", F.lit(True)),
-        cfg,
-    )
-    # the pre-write exchange as route_write builds it
-    clustered = routed.hint("rebalance", "sink_id")
-    logical = clustered._jdf.queryExecution().analyzed().toString()
-    assert "RebalancePartitions" in logical
+    plans = []
+    save = DataFrameWriter.save
+
+    def spy(self, path=None, *args, **kwargs):
+        plans.append((path, self._df._jdf.queryExecution().analyzed().toString()))
+        return save(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "save", spy)
+    cfg = PipelineConfig(num_partitions=4, checkpoint_buckets=2)
+    run_pipeline(spark, transcripts_df(spark, 500, 10, 0), str(tmp_path), cfg)
+    [(path, plan)] = plans
+    assert path.endswith("/routed")
+    assert re.search(r"RebalancePartitions \[ckpt_bucket#\d+, sink_id#\d+\]", plan), plan
+    assert "RepartitionByExpression" not in plan, plan
 
 
 def test_grouped_percentiles_preaggregates_before_window(spark):

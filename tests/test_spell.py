@@ -87,3 +87,20 @@ def test_distributed_spell_matches_sequential_oracle(spark, tdf):
     )
     assert bool(got["matched"].all())
     assert got["event_id"].tolist() == [r["event_id"] for r in recs]
+
+
+def test_streaming_assign_uses_the_mining_strategy(spark, tdf):
+    """streaming_assign must match with the strategy that mined the
+    clusters (Spell here), not the default Drain matcher."""
+    from logparser_spark.streaming.stream import streaming_assign
+
+    cfg = PipelineConfig(num_partitions=8)
+    mined = mine_templates(tdf, cfg, strategy="spell")
+    cols = ["conv_id", "turn_idx", "event_id", "matched"]
+
+    def rows(df):
+        return df.select(*cols).orderBy("conv_id", "turn_idx").toPandas()
+
+    want = rows(assign_templates(tdf, mined, cfg.drain, strategy="spell"))
+    got = rows(streaming_assign(tdf, mined, cfg, strategy="spell"))
+    assert got.equals(want)
