@@ -19,7 +19,7 @@ import json
 
 
 def main() -> None:
-    from logparser_spark.operators.mine import STRATEGIES
+    from logparser_spark.strategies import STRATEGIES
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--dataset", action="append", required=True,
@@ -37,6 +37,9 @@ def main() -> None:
     args = ap.parse_args()
     if len(args.dataset) != len(args.log_file):
         raise SystemExit("--dataset and --log-file counts must match")
+    # a CLI flag only logsig has: checked before Spark starts
+    if (args.strategy == "logsig") != bool(args.logsig_k):
+        ap.error("--logsig-k is required with --strategy logsig and only there")
 
     from pyspark.sql import SparkSession
 
@@ -52,9 +55,7 @@ def main() -> None:
     nparts = args.num_partitions or spark.sparkContext.defaultParallelism * 2
 
     strategy_params = None
-    if args.strategy == "logsig":
-        if not args.logsig_k:
-            raise SystemExit("--strategy logsig requires --logsig-k")
+    if args.logsig_k:
         from logparser_spark.logsig import LogSigParams
 
         strategy_params = LogSigParams(k=args.logsig_k)

@@ -22,7 +22,7 @@ import os
 
 
 def main() -> None:
-    from logparser_spark.operators.mine import STRATEGIES
+    from logparser_spark.strategies import STRATEGIES
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", help="input transcripts table path (parquet/iceberg)")

@@ -29,6 +29,7 @@ from collections import defaultdict
 from dataclasses import dataclass, field
 
 from logparser_spark.config import WILDCARD
+from logparser_spark.drain import Cluster
 
 
 @dataclass(frozen=True)
@@ -37,19 +38,9 @@ class AELParams:
 
 
 @dataclass
-class AELCluster:
-    tokens: list[str]
-    count: int = 0
-
-    @property
-    def template(self) -> str:
-        return " ".join(self.tokens)
-
-
-@dataclass
 class AELModel:
     params: AELParams
-    clusters: list[AELCluster] = field(default_factory=list)
+    clusters: list[Cluster] = field(default_factory=list)
     membership: dict[str, str] = field(default_factory=dict)  # masked → template
 
 
@@ -90,7 +81,7 @@ def ael_fit(weighted_texts: dict[str, int], params: AELParams | None = None) -> 
             for m in members:
                 model.membership[m] = tpl
     model.clusters = [
-        AELCluster(tokens=t.split(" ") if t else [""], count=c)
+        Cluster(tokens=t.split(" ") if t else [""], count=c)
         for t, c in sorted(templates.items())
     ]
     return model
@@ -116,18 +107,3 @@ def ael_parse_sequential(texts, params: AELParams | None = None):
         for m in masked
     ]
     return out, model.clusters
-
-
-def merge_ael_sets(template_sets, params: AELParams | None = None) -> list[AELCluster]:
-    """Global fit over the union of per-partition weighted text sets.
-
-    The distributed miner ships deduped (text, count) pairs, not fitted
-    templates: AEL bins by (token count, wildcard count), so a re-fit
-    over already-wildcarded templates could never reconcile variants
-    whose wildcard counts differ — fitting the union of raw texts makes
-    the distributed result exactly the sequential one."""
-    flat: dict[str, int] = {}
-    for ts in template_sets:
-        for template, count in ts:
-            flat[template] = flat.get(template, 0) + int(count)
-    return ael_fit(flat, params).clusters

@@ -280,33 +280,3 @@ def parse_sequential(
             }
         )
     return out, tree.clusters
-
-
-def merge_template_sets(
-    template_sets: Iterable[Iterable[tuple[str, int]]],
-    params: DrainParams | None = None,
-) -> list[Cluster]:
-    """Merge per-partition template sets into one global set.
-
-    Each input is an iterable of (template_string, count). Templates are
-    re-inserted into a fresh tree in a canonical order (by descending count
-    then template text) so the merge is deterministic regardless of
-    partition enumeration order (SURVEY §7.3 determinism mitigation (a)).
-    """
-    params = params or DrainParams()
-    flat: dict[str, int] = {}
-    for ts in template_sets:
-        for template, count in ts:
-            flat[template] = flat.get(template, 0) + int(count)
-    tree = DrainTree(params)
-    for template, count in sorted(flat.items(), key=lambda kv: (-kv[1], kv[0])):
-        tokens = template.split(" ") if template else [""]
-        match = tree.search(tokens)
-        if match is None:
-            tree.insert(Cluster(tokens=tokens, count=count))
-        else:
-            match.count += count
-            merged = tree.merge_template(tokens, match.tokens)
-            if merged != match.tokens:
-                match.tokens = merged
-    return tree.clusters

@@ -30,9 +30,10 @@ the canonical merge re-fits the kernel over the union of per-partition
 template sets (wildcards participate as ordinary tokens, so equal-shape
 templates unify).
 
-Mirrors the strategy surface used by :mod:`logparser_spark.operators.mine`
-and :mod:`logparser_spark.operators.assign` (``fit over weighted uniques``
-+ read-only matcher), like :mod:`logparser_spark.spell` does for Spell.
+The ``iplom`` entry of the strategy table
+(:mod:`logparser_spark.strategies`) pairs :func:`iplom_fit` (fit over
+weighted uniques) with the read-only
+:class:`logparser_spark.matchers.IPLoMMatcher`.
 """
 
 from __future__ import annotations
@@ -41,6 +42,7 @@ from collections import Counter, defaultdict
 from dataclasses import dataclass, field
 
 from logparser_spark.config import WILDCARD
+from logparser_spark.drain import Cluster
 
 Part = list[tuple[tuple[str, ...], int]]  # [(tokens, weight)]
 
@@ -50,16 +52,6 @@ class IPLoMParams:
     ct: float = 0.35          # cluster-goodness threshold (skip step 3)
     lower_bound: float = 0.25  # M-side ratio below → values are variables
     upper_bound: float = 0.9   # M-side ratio above → values are constants
-
-
-@dataclass
-class IPLoMCluster:
-    tokens: list[str]
-    count: int = 0
-
-    @property
-    def template(self) -> str:
-        return " ".join(self.tokens)
 
 
 def _cardinalities(part: Part) -> list[int]:
@@ -161,7 +153,7 @@ def _leaf_template(part: Part) -> list[str]:
 @dataclass
 class IPLoMModel:
     params: IPLoMParams
-    clusters: list[IPLoMCluster] = field(default_factory=list)
+    clusters: list[Cluster] = field(default_factory=list)
     membership: dict[str, str] = field(default_factory=dict)  # masked → template
 
 
@@ -191,7 +183,7 @@ def iplom_fit(weighted_texts: dict[str, int], params: IPLoMParams | None = None)
                 for toks, _ in leaf:
                     leaf_of[toks] = tpl
     model.clusters = [
-        IPLoMCluster(tokens=t.split(" ") if t else [""], count=c)
+        Cluster(tokens=t.split(" ") if t else [""], count=c)
         for t, c in sorted(templates.items())
     ]
     model.membership = {text: leaf_of[toks_of[text]] for text in weighted_texts}
@@ -219,18 +211,3 @@ def iplom_parse_sequential(texts, params: IPLoMParams | None = None):
         for m in masked
     ]
     return out, model.clusters
-
-
-def merge_iplom_sets(template_sets, params: IPLoMParams | None = None) -> list[IPLoMCluster]:
-    """Global fit over the union of per-partition weighted text sets.
-
-    The distributed miner ships each partition's deduped (text, count)
-    pairs — not fitted templates — so this single fit IS the sequential
-    result (the kernel is a pure function of the weighted unique-text
-    set).  Also accepts template strings (``<*>`` participates as an
-    ordinary token), which re-fit canonically for merge-of-merges use."""
-    flat: dict[str, int] = {}
-    for ts in template_sets:
-        for template, count in ts:
-            flat[template] = flat.get(template, 0) + int(count)
-    return iplom_fit(flat, params).clusters

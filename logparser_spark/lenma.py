@@ -137,19 +137,3 @@ def lenma_parse_sequential(texts, params: LenMaParams | None = None):
         for masked, c in rows
     ]
     return out, lmap.clusters
-
-
-def merge_lenma_sets(template_sets, params: LenMaParams | None = None) -> list[LenMaCluster]:
-    """Canonical-order merge: re-insert per-partition templates into a
-    fresh map in (count desc, template) order — partition-enumeration
-    independent, same scheme as Spell/Drain merges."""
-    flat: dict[str, int] = {}
-    for ts in template_sets:
-        for template, count in ts:
-            flat[template] = flat.get(template, 0) + int(count)
-    lmap = LenMaMap(params)
-    for template, count in sorted(flat.items(), key=lambda kv: (-kv[1], kv[0])):
-        tokens = template.split(" ") if template else [""]
-        c = lmap.add_message(tokens)
-        c.count += count - 1
-    return lmap.clusters

@@ -36,6 +36,7 @@ from collections import defaultdict
 from dataclasses import dataclass, field
 
 from logparser_spark.config import WILDCARD
+from logparser_spark.drain import Cluster
 
 
 @dataclass(frozen=True)
@@ -48,16 +49,6 @@ class LKEParams:
     #: the fit, not stall the driver.  Mitigations, in order: extend
     #: ``rex``, mine with ``sample_one_in``, or raise this consciously.
     max_fit_texts: int = 10_000
-
-
-@dataclass
-class LKECluster:
-    tokens: list[str]
-    count: int = 0
-
-    @property
-    def template(self) -> str:
-        return " ".join(self.tokens)
 
 
 def _w(i: int) -> float:
@@ -88,7 +79,7 @@ def weighted_edit_dist(a: list[str], b: list[str]) -> float:
 @dataclass
 class LKEModel:
     params: LKEParams
-    clusters: list[LKECluster] = field(default_factory=list)
+    clusters: list[Cluster] = field(default_factory=list)
     membership: dict[str, str] = field(default_factory=dict)
 
 
@@ -182,7 +173,7 @@ def lke_fit(weighted_texts: dict[str, int], params: LKEParams | None = None) -> 
                     member_of[t] = tpl
 
     model.clusters = [
-        LKECluster(tokens=t.split(" ") if t else [""], count=c)
+        Cluster(tokens=t.split(" ") if t else [""], count=c)
         for t, c in sorted(templates.items())
     ]
     model.membership = {t: member_of[toks[t]] for t in texts}
@@ -209,14 +200,3 @@ def lke_parse_sequential(texts, params: LKEParams | None = None):
         for m in masked
     ]
     return out, model.clusters
-
-
-def merge_lke_sets(template_sets, params: LKEParams | None = None) -> list[LKECluster]:
-    """Global fit over the union of per-partition weighted text sets
-    (the distributed miner ships deduped texts — exactness as for
-    IPLoM/AEL/LogMine)."""
-    flat: dict[str, int] = {}
-    for ts in template_sets:
-        for template, count in ts:
-            flat[template] = flat.get(template, 0) + int(count)
-    return lke_fit(flat, params).clusters

@@ -30,6 +30,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from logparser_spark.config import WILDCARD
+from logparser_spark.drain import Cluster
 from logparser_spark.spell import lcs
 
 
@@ -38,16 +39,6 @@ class LogMineParams:
     max_dist: float = 0.3
     levels: int = 1
     relax: float = 1.5  # max_dist multiplier per additional level
-
-
-@dataclass
-class LogMineCluster:
-    tokens: list[str]
-    count: int = 0
-
-    @property
-    def template(self) -> str:
-        return " ".join(self.tokens)
 
 
 def logmine_dist(a: list[str], b: list[str]) -> float:
@@ -93,7 +84,7 @@ def merge_pair(a: list[str], b: list[str]) -> list[str]:
 @dataclass
 class LogMineModel:
     params: LogMineParams
-    clusters: list[LogMineCluster] = field(default_factory=list)
+    clusters: list[Cluster] = field(default_factory=list)
     membership: dict[str, str] = field(default_factory=dict)
 
 
@@ -149,7 +140,7 @@ def logmine_fit(
         for m in members:
             model.membership[m] = tpl
     model.clusters = [
-        LogMineCluster(tokens=t.split(" ") if t else [""], count=c)
+        Cluster(tokens=t.split(" ") if t else [""], count=c)
         for t, c in sorted(templates.items())
     ]
     return model
@@ -175,14 +166,3 @@ def logmine_parse_sequential(texts, params: LogMineParams | None = None):
         for m in masked
     ]
     return out, model.clusters
-
-
-def merge_logmine_sets(template_sets, params: LogMineParams | None = None) -> list[LogMineCluster]:
-    """Global fit over the union of per-partition weighted text sets
-    (the distributed miner ships deduped texts — same exactness argument
-    as IPLoM/AEL)."""
-    flat: dict[str, int] = {}
-    for ts in template_sets:
-        for template, count in ts:
-            flat[template] = flat.get(template, 0) + int(count)
-    return logmine_fit(flat, params).clusters

@@ -33,21 +33,13 @@ from __future__ import annotations
 from collections import Counter, defaultdict
 from dataclasses import dataclass, field
 
+from logparser_spark.drain import Cluster
+
 
 @dataclass(frozen=True)
 class LogSigParams:
     k: int = 20
     max_sweeps: int = 100
-
-
-@dataclass
-class LogSigCluster:
-    tokens: list[str]
-    count: int = 0
-
-    @property
-    def template(self) -> str:
-        return " ".join(self.tokens)
 
 
 def term_pairs(toks: tuple[str, ...]) -> frozenset[tuple[str, str]]:
@@ -59,7 +51,7 @@ def term_pairs(toks: tuple[str, ...]) -> frozenset[tuple[str, str]]:
 @dataclass
 class LogSigModel:
     params: LogSigParams
-    clusters: list[LogSigCluster] = field(default_factory=list)
+    clusters: list[Cluster] = field(default_factory=list)
     membership: dict[str, str] = field(default_factory=dict)
 
 
@@ -162,7 +154,7 @@ def logsig_fit(
         for t in grp:
             model.membership[t] = tpl
     model.clusters = [
-        LogSigCluster(tokens=t.split(" ") if t else [""], count=c)
+        Cluster(tokens=t.split(" ") if t else [""], count=c)
         for t, c in sorted(templates.items())
     ]
     return model
@@ -188,14 +180,3 @@ def logsig_parse_sequential(texts, params: LogSigParams | None = None):
         for m in masked
     ]
     return out, model.clusters
-
-
-def merge_logsig_sets(template_sets, params: LogSigParams | None = None) -> list[LogSigCluster]:
-    """Global fit over the union of per-partition weighted text sets
-    (distributed miner ships deduped texts — exactness as for the other
-    batch kernels)."""
-    flat: dict[str, int] = {}
-    for ts in template_sets:
-        for template, count in ts:
-            flat[template] = flat.get(template, 0) + int(count)
-    return logsig_fit(flat, params).clusters

@@ -50,7 +50,7 @@ Documented graft choices (paper ambiguities):
   rely on.  The paper leaves seeding unspecified (meta-heuristic).
 * occurrences are counted by the repo's defined fixed-length assignment
   semantics (most-specific compatible template, ties lexicographic —
-  see ``operators/assign._IPLoMMatcher``).
+  see ``matchers.IPLoMMatcher``).
 
 Batch kernel like IPLoM/AEL/LogMine/LKE/LogSig: the distributed miner
 ships weighted unique texts and the single seeded global fit IS the
@@ -65,6 +65,7 @@ from collections import defaultdict
 from dataclasses import dataclass, field
 
 from logparser_spark.config import WILDCARD
+from logparser_spark.drain import Cluster
 
 
 @dataclass(frozen=True)
@@ -84,19 +85,9 @@ class MoLFIParams:
 
 
 @dataclass
-class MoLFICluster:
-    tokens: list[str]
-    count: int = 0
-
-    @property
-    def template(self) -> str:
-        return " ".join(self.tokens)
-
-
-@dataclass
 class MoLFIModel:
     params: MoLFIParams
-    clusters: list[MoLFICluster] = field(default_factory=list)
+    clusters: list[Cluster] = field(default_factory=list)
     membership: dict[str, str] = field(default_factory=dict)
 
 
@@ -423,7 +414,7 @@ def _hill_climb_merge(
     return sol
 
 
-# -- fit / oracle / merge surface -------------------------------------------
+# -- fit / oracle surface -------------------------------------------------
 
 
 def molfi_fit(
@@ -466,7 +457,7 @@ def molfi_fit(
             counts[best] += w
             model.membership[" ".join(toks)] = " ".join(best)
     model.clusters = [
-        MoLFICluster(list(t), counts[t])
+        Cluster(list(t), counts[t])
         for t in sorted(counts)
     ]
     return model
@@ -493,15 +484,3 @@ def molfi_parse_sequential(texts, params: MoLFIParams | None = None):
         for m in masked
     ]
     return out, model.clusters
-
-
-def merge_molfi_sets(
-    template_sets, params: MoLFIParams | None = None
-) -> list[MoLFICluster]:
-    """Canonical merge: union the per-partition weighted unique texts and
-    run the one seeded global fit — distributed == sequential exactly."""
-    weights: dict[str, int] = {}
-    for pairs in template_sets:
-        for text, count in pairs:
-            weights[text] = weights.get(text, 0) + count
-    return molfi_fit(weights, params).clusters

@@ -10,9 +10,14 @@ on one node, so the graft splits it:
    determinism) runs the sequential Drain kernel over its Arrow batches
    inside ``mapInPandas`` and emits only its tiny template set.
 3. **driver merge** — template sets are KBs; they are merged into one
-   global set by canonical-order re-insertion into a fresh tree
-   (:func:`logparser_spark.drain.merge_template_sets`), which makes the
-   result independent of partition enumeration order.
+   global set by :func:`logparser_spark.strategies.merge_template_sets`
+   (canonical-order re-insertion into a fresh kernel for online
+   strategies, one global fit over the shipped texts for batch ones),
+   which makes the result independent of partition enumeration order.
+
+The strategy name is looked up once in the strategy table
+(:mod:`logparser_spark.strategies`); its record supplies the kernel,
+the merge and the params type.
 
 Per-row Python exists only *inside* the mining batch operator where the
 algorithm is inherently sequential, and is bounded: identical masked texts
@@ -30,26 +35,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from logparser_spark.config import DrainParams, PipelineConfig
-from logparser_spark.drain import Cluster, DrainTree, merge_template_sets
 from logparser_spark.functions.hashing import bucket_expr
 from logparser_spark.functions.masking import mask_expr
-
-#: strategies whose fit is a pure function of the weighted unique-text
-#: set — their mine ships per-partition unique TEXTS to the driver, so
-#: the driver-side volume is bounded by the corpus' unique-masked-text
-#: cardinality and must be guarded (see ``unique_cap``).
-BATCH_STRATEGIES = ("iplom", "ael", "logmine", "lke", "logsig", "molfi")
-#: every strategy ``mine_templates`` / ``assign_templates`` accept
-STRATEGIES = ("drain", "spell", "lenma", "shiso", *BATCH_STRATEGIES)
-
-
-def check_strategy(strategy: str) -> None:
-    """Fail on an unknown strategy name before any Spark job runs (the
-    dispatch chains would otherwise fall through to Drain)."""
-    if strategy not in STRATEGIES:
-        raise ValueError(
-            f"unknown strategy {strategy!r}; expected one of {STRATEGIES}"
-        )
+from logparser_spark.strategies import Strategy, check_strategy, merge_template_sets
 
 
 def with_masked(df: DataFrame, params: DrainParams) -> DataFrame:
@@ -57,25 +45,19 @@ def with_masked(df: DataFrame, params: DrainParams) -> DataFrame:
     return df.withColumn("masked", mask_expr("text", params.rex))
 
 
-def _mine_partition(params: DrainParams, strategy: str = "drain", tau: float = 0.5,
-                    strategy_params=None):
+def _mine_partition(strategy: Strategy, params):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
         # dedup across the whole partition, preserving first-seen order;
         # per-batch factorize + bincount is vectorized (no per-row Python)
         seen: dict[str, int] = {}
-        order: list[str] = []
         for pdf in batches:
             codes, uniques = pd.factorize(pdf["masked"])
             counts = np.bincount(codes, minlength=len(uniques))
             for text, cnt in zip(uniques, counts):
-                if text in seen:
-                    seen[text] += int(cnt)
-                else:
-                    seen[text] = int(cnt)
-                    order.append(text)
-        if strategy in BATCH_STRATEGIES:
+                seen[text] = seen.get(text, 0) + int(cnt)
+        if strategy.batch:
             # batch algorithms are pure functions of the weighted unique-
             # text SET: emit the partition's deduped texts and let the
             # driver run the one global fit over the union — distributed
@@ -85,31 +67,13 @@ def _mine_partition(params: DrainParams, strategy: str = "drain", tau: float = 0
             # Collected volume is unique masked texts (KBs–MBs: masking
             # collapses parameters), and the scale path mines on a
             # sample_one_in subset anyway.
-            yield pd.DataFrame(
-                {"template": list(seen.keys()), "count": list(seen.values())}
-            )
+            yield pd.DataFrame({"template": list(seen), "count": list(seen.values())})
             return
-        if strategy == "spell":
-            from logparser_spark.spell import SpellMap, SpellParams
-
-            tree = SpellMap(SpellParams(tau))
-        elif strategy == "lenma":
-            from logparser_spark.lenma import LenMaMap
-
-            tree = LenMaMap(strategy_params)
-        elif strategy == "shiso":
-            from logparser_spark.shiso import ShisoTree
-
-            tree = ShisoTree(strategy_params)
-        else:
-            tree = DrainTree(params)
-        for text in order:
-            cluster = tree.add_message(text.split())
-            cluster.count += seen[text] - 1
+        clusters = strategy.fold(params, ((t.split(), c) for t, c in seen.items()))
         yield pd.DataFrame(
             {
-                "template": [c.template for c in tree.clusters],
-                "count": [c.count for c in tree.clusters],
+                "template": [c.template for c in clusters],
+                "count": [c.count for c in clusters],
             }
         )
 
@@ -121,7 +85,6 @@ def mine_templates(
     cfg: PipelineConfig | None = None,
     sample_one_in: int = 1,
     strategy: str = "drain",
-    tau: float = 0.5,
     partition_col: str = "conv_id",
     order_cols: tuple[str, ...] = ("conv_id", "turn_idx"),
     strategy_params=None,
@@ -150,16 +113,22 @@ def mine_templates(
     disables the guard.  Online kernels (drain/spell/lenma/shiso) need
     no guard — they collect per-partition *template sets*, which their
     trees compress regardless of input cardinality.
+
+    ``strategy_params`` (the strategy's params type, checked before any
+    Spark job) reaches the partition kernel and the driver merge; when
+    omitted the strategy's defaults apply.  Drain always mines with
+    ``cfg.drain`` and takes no ``strategy_params``.
     """
-    check_strategy(strategy)
     cfg = cfg or PipelineConfig()
     params = cfg.drain
+    s = check_strategy(strategy)
+    kernel_params = s.resolve_params(strategy_params, params)
     if "masked" not in df.columns:
         df = with_masked(df, params)
     src = df
     if sample_one_in > 1:
         src = src.filter(bucket_expr(partition_col, sample_one_in) == 0)
-    if strategy in BATCH_STRATEGIES and unique_cap is not None:
+    if s.batch and unique_cap is not None:
         # cap_action='sample' RE-VERIFIES after each escalation: the
         # filter drops whole partition_col groups, and when unique-text
         # cardinality is not proportional to group count (one giant
@@ -217,44 +186,7 @@ def mine_templates(
         .sortWithinPartitions(*order_cols)
     )
     rows = part.mapInPandas(
-        _mine_partition(params, strategy, tau, strategy_params),
-        "template string, count long",
+        _mine_partition(s, kernel_params), "template string, count long"
     ).collect()
     pairs = [[(r["template"], r["count"]) for r in rows]]
-    if strategy == "spell":
-        from logparser_spark.spell import SpellParams, merge_spell_sets
-
-        return merge_spell_sets(pairs, SpellParams(tau))
-    if strategy == "iplom":
-        from logparser_spark.iplom import merge_iplom_sets
-
-        return merge_iplom_sets(pairs, strategy_params)
-    if strategy == "ael":
-        from logparser_spark.ael import merge_ael_sets
-
-        return merge_ael_sets(pairs, strategy_params)
-    if strategy == "logmine":
-        from logparser_spark.logmine import merge_logmine_sets
-
-        return merge_logmine_sets(pairs, strategy_params)
-    if strategy == "lke":
-        from logparser_spark.lke import merge_lke_sets
-
-        return merge_lke_sets(pairs, strategy_params)
-    if strategy == "logsig":
-        from logparser_spark.logsig import merge_logsig_sets
-
-        return merge_logsig_sets(pairs, strategy_params)
-    if strategy == "molfi":
-        from logparser_spark.molfi import merge_molfi_sets
-
-        return merge_molfi_sets(pairs, strategy_params)
-    if strategy == "lenma":
-        from logparser_spark.lenma import merge_lenma_sets
-
-        return merge_lenma_sets(pairs, strategy_params)
-    if strategy == "shiso":
-        from logparser_spark.shiso import merge_shiso_sets
-
-        return merge_shiso_sets(pairs, strategy_params)
-    return merge_template_sets(pairs, params)
+    return merge_template_sets(pairs, strategy, kernel_params)

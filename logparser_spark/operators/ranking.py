@@ -32,13 +32,29 @@ sharing no query term never shuffle — the decontaminate lesson.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from logparser_spark.functions.text import tokens_expr
 
 #: micro-score scale: 6 dp per term contribution, summed exactly
 _BM25_SCALE = 1_000_000
+
+
+def _bm25_contrib(n_docs: Column, avgdl: Column, k1: float, b: float) -> Column:
+    """One (term, doc) micro-score ``floor(idf · tf-sat · 10^6 + 0.5)``
+    as a BIGINT over the ``df``, ``tf`` and ``dl`` columns — the one
+    expression batch and streaming BM25 share."""
+    idf = F.log(
+        F.lit(1.0) + (n_docs - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    )
+    sat = (F.col("tf") * (k1 + 1.0)) / (
+        F.col("tf") + k1 * (1.0 - b + b * (F.col("dl") / avgdl))
+    )
+    # floor(x·10^6 + 0.5): explicit half-up to integer micro-score —
+    # identical on both engines (Spark's double→bigint CAST truncates
+    # while DuckDB's rounds, so neither cast is used bare)
+    return F.floor(idf * sat * _BM25_SCALE + F.lit(0.5)).cast("bigint")
 
 
 def bm25_scores(
@@ -80,19 +96,9 @@ def bm25_scores(
         ).distinct()
     )
 
-    avgdl = total_tokens / n_docs
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
+    contrib = _bm25_contrib(
+        F.lit(float(n_docs)), F.lit(total_tokens / n_docs), k1, b
     )
-    sat = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * (F.col("dl") / F.lit(avgdl)))
-    )
-    # floor(x·10^6 + 0.5): explicit half-up to integer micro-score —
-    # identical on both engines (Spark's double→bigint CAST truncates
-    # while DuckDB's rounds, so neither cast is used bare)
-    contrib = F.floor(idf * sat * _BM25_SCALE + F.lit(0.5)).cast("bigint")
     q_term_set = q_terms.select("term").distinct()
     return (
         tf.join(F.broadcast(q_terms), "term")
@@ -166,18 +172,12 @@ def bm25_topk_from_cells(
     dft = matched.groupBy("win_start", "term").agg(
         F.count(F.lit(1)).alias("df")
     )
-    # expression shapes mirror bm25_scores exactly; integer inputs are
-    # exact doubles (< 2^53), so every intermediate double is identical
+    # the same expression as bm25_scores; integer inputs are exact
+    # doubles (< 2^53), so every intermediate double is identical
     n_docs_d = F.col("n_docs").cast("double")
-    avgdl = F.col("total_tokens").cast("double") / n_docs_d
-    idf = F.log(
-        F.lit(1.0)
-        + (n_docs_d - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
+    contrib = _bm25_contrib(
+        n_docs_d, F.col("total_tokens").cast("double") / n_docs_d, k1, b
     )
-    sat = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * (F.col("dl") / avgdl))
-    )
-    contrib = F.floor(idf * sat * _BM25_SCALE + F.lit(0.5)).cast("bigint")
     scored = (
         matched.join(F.broadcast(q_terms), "term")
         .join(F.broadcast(dft), ["win_start", "term"])

@@ -9,7 +9,7 @@ Layout under the pipeline output root::
 
     <out>/routed/ckpt_bucket=N/sink_id=S/*.parquet   (dynamic overwrite)
     <out>/_manifest/*.parquet                        (append-only ledger)
-    <out>/_templates.json                            (frozen template set)
+    <out>/_templates.json                            (frozen template set + strategy)
 
 A bucket is *committed* iff a manifest row exists for it.  The routed
 write uses dynamic partition overwrite, so a bucket that was half-written
@@ -21,7 +21,9 @@ Iceberg snapshot tag — same protocol, different carrier.)
 The template set is frozen at first successful mine (atomic
 write-then-rename) and *reused* on resume: otherwise a resumed run could
 mine a slightly different template set and route the remaining buckets
-inconsistently.
+inconsistently.  The artifact records the strategy that mined it, so a
+resume with another strategy fails instead of matching the frozen set
+with another engine's matcher.
 """
 
 from __future__ import annotations
@@ -87,27 +89,50 @@ def write_manifest_rows(metrics: DataFrame, out_dir: str) -> None:
     metrics.coalesce(1).write.mode("append").parquet(_manifest_dir(out_dir))
 
 
-def save_templates(clusters: list[Cluster], out_dir: str) -> str:
-    """Atomically freeze the mined template set (idempotent)."""
+def save_templates(clusters: list[Cluster], out_dir: str, strategy: str) -> str:
+    """Atomically freeze the mined template set and the strategy that
+    mined it (idempotent)."""
     path = os.path.join(out_dir, "_templates.json")
     if os.path.exists(path):
         return path
     os.makedirs(out_dir, exist_ok=True)
-    payload = sorted(
+    templates = sorted(
         ({"template": c.template, "count": c.count} for c in clusters),
         key=lambda d: d["template"],
     )
     fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".tmp")
     with os.fdopen(fd, "w") as f:
-        json.dump(payload, f)
+        json.dump({"strategy": strategy, "templates": templates}, f)
     os.replace(tmp, path)
     return path
 
 
-def load_templates(out_dir: str) -> list[Cluster] | None:
+def _read_templates(out_dir: str) -> dict | None:
     path = os.path.join(out_dir, "_templates.json")
     if not os.path.exists(path):
         return None
     with open(path) as f:
         payload = json.load(f)
-    return [Cluster(tokens=d["template"].split(" "), count=d["count"]) for d in payload]
+    if not isinstance(payload, dict):
+        raise ValueError(
+            f"{path} records no strategy (written by an older version); "
+            "remove the output directory and re-run"
+        )
+    return payload
+
+
+def load_templates(out_dir: str) -> list[Cluster] | None:
+    payload = _read_templates(out_dir)
+    if payload is None:
+        return None
+    return [
+        Cluster(tokens=d["template"].split(" "), count=d["count"])
+        for d in payload["templates"]
+    ]
+
+
+def frozen_strategy(out_dir: str) -> str | None:
+    """The strategy that mined the frozen template set (None when there
+    is no frozen set)."""
+    payload = _read_templates(out_dir)
+    return None if payload is None else payload["strategy"]

@@ -34,6 +34,7 @@ from logparser_spark.operators.enrich import enrich
 from logparser_spark.operators.mine import mine_templates
 from logparser_spark.operators.route import route_write
 from logparser_spark.plans import manifest as M
+from logparser_spark.strategies import check_strategy
 
 
 @dataclass
@@ -72,12 +73,21 @@ def run_pipeline(
     (templates are plain strings).  ``routed_rows`` counts the rows of
     the buckets this run wrote, or of the whole table when every bucket
     was already committed.
+    A resume must use the strategy recorded with the frozen templates;
+    another one raises ``ValueError`` before any Spark job.
     ``fail_after_buckets`` is a test hook: commit only the first k buckets'
     manifests then raise, simulating a mid-run death *after* partial
     output landed (SURVEY §5.2 resume test).
     """
     import os
 
+    check_strategy(strategy)
+    frozen = M.frozen_strategy(out_dir)
+    if frozen is not None and frozen != strategy:
+        raise ValueError(
+            f"{out_dir} holds templates mined with strategy {frozen!r}; "
+            f"resume it with strategy={frozen!r}, not {strategy!r}"
+        )
     cfg = cfg or PipelineConfig()
     run_id = uuid.uuid4().hex[:12]
     t0 = time.time()
@@ -115,7 +125,7 @@ def run_pipeline(
         clusters = mine_templates(
             transcripts, cfg, sample_one_in=mine_sample_one_in, strategy=strategy
         )
-        M.save_templates(clusters, out_dir)
+        M.save_templates(clusters, out_dir, strategy)
         clusters = M.load_templates(out_dir)  # canonical (sorted) form
     result.n_templates = len(clusters)
 

@@ -37,6 +37,7 @@ import math
 from dataclasses import dataclass, field
 
 from logparser_spark.config import WILDCARD
+from logparser_spark.drain import Cluster
 
 
 @dataclass(frozen=True)
@@ -44,16 +45,6 @@ class ShisoParams:
     threshold: float = 0.15    # max mean word distance to join a cluster
     max_children: int = 4      # node capacity c
     mismatch_floor: float = 0.5  # base distance for ANY unequal word pair
-
-
-@dataclass
-class ShisoCluster:
-    tokens: list[str]
-    count: int = 0
-
-    @property
-    def template(self) -> str:
-        return " ".join(self.tokens)
 
 
 def word_vec(w: str) -> tuple[float, float, float, float]:
@@ -98,7 +89,7 @@ def log_dist(fmt: list[str], toks: list[str], floor: float = 0.5) -> float:
 
 @dataclass
 class _Node:
-    cluster: ShisoCluster | None = None
+    cluster: Cluster | None = None
     children: list["_Node"] = field(default_factory=list)
 
 
@@ -109,7 +100,7 @@ class ShisoTree:
     def __init__(self, params: ShisoParams | None = None):
         self.params = params or ShisoParams()
         self.root = _Node()
-        self.clusters: list[ShisoCluster] = []
+        self.clusters: list[Cluster] = []
 
     def _best_child(self, node: _Node, toks: list[str]) -> tuple[_Node | None, float]:
         best, best_d = None, math.inf
@@ -127,7 +118,7 @@ class ShisoTree:
             key=lambda ch: abs(len(ch.cluster.tokens) - len(toks)),
         )
 
-    def add_message(self, tokens: list[str]) -> ShisoCluster:
+    def add_message(self, tokens: list[str]) -> Cluster:
         toks = list(tokens) if tokens else [""]
         node = self.root
         while True:
@@ -140,13 +131,13 @@ class ShisoTree:
                         c.tokens[i] = WILDCARD
                 return c
             if len(node.children) < self.params.max_children:
-                cluster = ShisoCluster(tokens=toks, count=1)
+                cluster = Cluster(tokens=toks, count=1)
                 self.clusters.append(cluster)
                 node.children.append(_Node(cluster=cluster))
                 return cluster
             node = best if best is not None and d < math.inf else self._descend_fallback(node, toks)
 
-    def search(self, tokens: list[str]) -> ShisoCluster | None:
+    def search(self, tokens: list[str]) -> Cluster | None:
         toks = list(tokens) if tokens else [""]
         node = self.root
         while node.children:
@@ -180,18 +171,3 @@ def shiso_parse_sequential(texts, params: ShisoParams | None = None):
         for masked, c in rows
     ]
     return out, tree.clusters
-
-
-def merge_shiso_sets(template_sets, params: ShisoParams | None = None) -> list[ShisoCluster]:
-    """Canonical-order merge: re-insert per-partition templates into a
-    fresh tree in (count desc, template) order."""
-    flat: dict[str, int] = {}
-    for ts in template_sets:
-        for template, count in ts:
-            flat[template] = flat.get(template, 0) + int(count)
-    tree = ShisoTree(params)
-    for template, count in sorted(flat.items(), key=lambda kv: (-kv[1], kv[0])):
-        tokens = template.split(" ") if template else [""]
-        c = tree.add_message(tokens)
-        c.count += count - 1
-    return tree.clusters

@@ -13,30 +13,21 @@ which defines the output — is.
 
 Mirrors the :class:`logparser_spark.drain.DrainTree` surface
 (``add_message`` / ``search`` / ``clusters``) so the distributed
-mine→merge→assign scheme in :mod:`logparser_spark.operators.mine` and
-:mod:`logparser_spark.operators.assign` can use either engine.
+mine→merge→assign scheme runs it as the ``spell`` entry of the strategy
+table (:mod:`logparser_spark.strategies`).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from logparser_spark.config import WILDCARD
+from logparser_spark.drain import Cluster
 
 
-@dataclass
+@dataclass(frozen=True)
 class SpellParams:
     tau: float = 0.5
-
-
-@dataclass
-class SpellCluster:
-    tokens: list[str]
-    count: int = 0
-
-    @property
-    def template(self) -> str:
-        return " ".join(self.tokens)
 
 
 def lcs(a: list[str], b: list[str]) -> list[str]:
@@ -86,9 +77,9 @@ class SpellMap:
 
     def __init__(self, params: SpellParams | None = None):
         self.params = params or SpellParams()
-        self.clusters: list[SpellCluster] = []
+        self.clusters: list[Cluster] = []
 
-    def _best(self, tokens: list[str]) -> tuple[SpellCluster | None, list[str]]:
+    def _best(self, tokens: list[str]) -> tuple[Cluster | None, list[str]]:
         consts = _constants(tokens)
         const_set = set(consts)
         best, best_lcs = None, []
@@ -106,16 +97,16 @@ class SpellMap:
             return best, best_lcs
         return None, []
 
-    def search(self, tokens: list[str]) -> SpellCluster | None:
+    def search(self, tokens: list[str]) -> Cluster | None:
         hit, _ = self._best(tokens)
         return hit
 
-    def add_message(self, tokens: list[str]) -> SpellCluster:
+    def add_message(self, tokens: list[str]) -> Cluster:
         if not tokens:
             tokens = [""]
         hit, common = self._best(tokens)
         if hit is None:
-            cluster = SpellCluster(tokens=list(tokens), count=1)
+            cluster = Cluster(tokens=list(tokens), count=1)
             self.clusters.append(cluster)
             return cluster
         hit.count += 1
@@ -145,17 +136,3 @@ def spell_parse_sequential(texts, params: SpellParams | None = None):
         for masked, c in rows
     ]
     return out, smap.clusters
-
-
-def merge_spell_sets(template_sets, params: SpellParams | None = None) -> list[SpellCluster]:
-    """Canonical-order merge of per-partition Spell template sets."""
-    flat: dict[str, int] = {}
-    for ts in template_sets:
-        for template, count in ts:
-            flat[template] = flat.get(template, 0) + int(count)
-    smap = SpellMap(params)
-    for template, count in sorted(flat.items(), key=lambda kv: (-kv[1], kv[0])):
-        tokens = template.split(" ") if template else [""]
-        c = smap.add_message(tokens)
-        c.count += count - 1
-    return smap.clusters

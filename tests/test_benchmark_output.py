@@ -6,6 +6,8 @@ import csv
 import os
 import re
 import shutil
+import subprocess
+import sys
 import tempfile
 
 import pytest
@@ -19,6 +21,25 @@ from logparser_spark.benchmark import (
 from logparser_spark.drain import event_id_of
 from logparser_spark.operators.structured_output import write_structured_csv
 from logparser_spark.sources.logfile import compile_log_format
+
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+@pytest.mark.parametrize("flags", [["--strategy", "drain", "--logsig-k", "3"],
+                                   ["--strategy", "logsig"]])
+def test_logsig_k_checked_at_parse_time(flags):
+    """``--logsig-k`` belongs to logsig alone: a missing or stray one is a
+    usage error from argparse, before any SparkSession starts."""
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "jobs", "run_benchmark.py"),
+         "--dataset", "HDFS", "--log-file", "unused.log", *flags],
+        cwd=REPO, env={**os.environ, "PYTHONPATH": REPO},
+        capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 2, proc.stderr
+    assert "--logsig-k is required with --strategy logsig and only there" in proc.stderr
+    assert "SparkContext" not in proc.stderr
 
 
 def test_settings_bank_formats_compile():

@@ -9,10 +9,10 @@ from logparser_spark.drain import (
     event_id_of,
     extract_parameters,
     mask_text,
-    merge_template_sets,
     parse_sequential,
     tokenize,
 )
+from logparser_spark.strategies import merge_template_sets
 
 HDFS_LINES = [
     "Receiving block blk_-1608999687919862906 src: /10.250.19.102:54106 dest: /10.250.19.102:50010",

@@ -10,11 +10,11 @@ from logparser_spark.iplom import (
     IPLoMParams,
     iplom_fit,
     iplom_parse_sequential,
-    merge_iplom_sets,
 )
 from logparser_spark.operators.assign import assign_templates
 from logparser_spark.operators.mine import mine_templates
 from logparser_spark.sources.transcripts import transcripts_df, transcripts_pdf
+from logparser_spark.strategies import merge_template_sets
 
 HDFS_LINES = [
     "Receiving block blk_-160899 src: /10.250.19.102:54106 dest: /10.250.19.102:50010",
@@ -98,8 +98,8 @@ def test_fit_is_order_free_and_merge_is_canonical():
         (c.template, c.count) for c in b.clusters
     ]
     pairs = [(c.template, c.count) for c in clusters]
-    merged_a = merge_iplom_sets([pairs])
-    merged_b = merge_iplom_sets([list(reversed(pairs))])
+    merged_a = merge_template_sets([pairs], "iplom")
+    merged_b = merge_template_sets([list(reversed(pairs))], "iplom")
     assert [(c.template, c.count) for c in merged_a] == [
         (c.template, c.count) for c in merged_b
     ]
@@ -121,16 +121,16 @@ def test_iplom_matcher_most_specific_rule():
     """Assignment semantics when a text is compatible with several mined
     templates: the most-specific (most constant positions) wins, full
     ties to the lexicographically-smallest — defined behavior, not fit
-    membership (see _IPLoMMatcher docstring)."""
+    membership (see IPLoMMatcher docstring)."""
     from logparser_spark.drain import event_id_of
-    from logparser_spark.operators.assign import _IPLoMMatcher
+    from logparser_spark.matchers import IPLoMMatcher
 
     import numpy as np
 
     templates = sorted(
         ["send <*> to <*>", "send pkt to <*>", "recv <*> to <*>", "recv <*> to here"]
     )
-    m = _IPLoMMatcher(templates, with_params=False)
+    m = IPLoMMatcher(templates, IPLoMParams(), with_params=False)
     got = m.match_unique(np.array(["send pkt to host", "recv x to here", "other msg"]))
     # 'send pkt to host' fits both send-templates → 2-constant one wins
     assert got[0] == ("send pkt to <*>", event_id_of("send pkt to <*>"), True)

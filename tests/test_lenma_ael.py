@@ -5,17 +5,17 @@ from __future__ import annotations
 
 import pytest
 
-from logparser_spark.ael import AELParams, ael_fit, ael_parse_sequential, merge_ael_sets
+from logparser_spark.ael import AELParams, ael_fit, ael_parse_sequential
 from logparser_spark.config import PipelineConfig
 from logparser_spark.lenma import (
     LenMaMap,
     LenMaParams,
     lenma_parse_sequential,
-    merge_lenma_sets,
 )
 from logparser_spark.operators.assign import assign_templates
 from logparser_spark.operators.mine import mine_templates
 from logparser_spark.sources.transcripts import transcripts_df, transcripts_pdf
+from logparser_spark.strategies import merge_template_sets
 
 HDFS_LINES = [
     "Receiving block blk_-160899 src: /10.250.19.102:54106 dest: /10.250.19.102:50010",
@@ -73,8 +73,8 @@ def test_lenma_wildcard_positions_score_perfect():
 def test_lenma_merge_canonical():
     _, clusters = lenma_parse_sequential(HDFS_LINES)
     pairs = [(c.template, c.count) for c in clusters]
-    a = merge_lenma_sets([pairs])
-    b = merge_lenma_sets([list(reversed(pairs))])
+    a = merge_template_sets([pairs], "lenma")
+    b = merge_template_sets([list(reversed(pairs))], "lenma")
     assert sorted(c.template for c in a) == sorted(c.template for c in b)
     assert sum(c.count for c in a) == len(HDFS_LINES)
 
@@ -118,8 +118,8 @@ def test_ael_fit_order_free_and_merge_canonical():
         (c.template, c.count) for c in b.clusters
     ]
     pairs = [(c.template, c.count) for c in clusters]
-    assert sorted(c.template for c in merge_ael_sets([pairs])) == sorted(
-        c.template for c in merge_ael_sets([list(reversed(pairs))])
+    assert sorted(c.template for c in merge_template_sets([pairs], "ael")) == sorted(
+        c.template for c in merge_template_sets([list(reversed(pairs))], "ael")
     )
 
 

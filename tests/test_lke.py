@@ -10,12 +10,12 @@ from logparser_spark.lke import (
     LKEParams,
     lke_fit,
     lke_parse_sequential,
-    merge_lke_sets,
     weighted_edit_dist,
 )
 from logparser_spark.operators.assign import assign_templates
 from logparser_spark.operators.mine import mine_templates
 from logparser_spark.sources.transcripts import transcripts_df, transcripts_pdf
+from logparser_spark.strategies import merge_template_sets
 
 HDFS_LINES = [
     "Receiving block blk_-160899 src: /10.250.19.102:54106 dest: /10.250.19.102:50010",
@@ -80,8 +80,8 @@ def test_lke_fit_order_free_and_merge_canonical():
         (c.template, c.count) for c in b.clusters
     ]
     pairs = [(c.template, c.count) for c in clusters]
-    assert sorted(c.template for c in merge_lke_sets([pairs])) == sorted(
-        c.template for c in merge_lke_sets([list(reversed(pairs))])
+    assert sorted(c.template for c in merge_template_sets([pairs], "lke")) == sorted(
+        c.template for c in merge_template_sets([list(reversed(pairs))], "lke")
     )
 
 

@@ -11,12 +11,12 @@ from logparser_spark.logsig import (
     LogSigParams,
     logsig_fit,
     logsig_parse_sequential,
-    merge_logsig_sets,
     term_pairs,
 )
 from logparser_spark.operators.assign import assign_templates
 from logparser_spark.operators.mine import mine_templates
 from logparser_spark.sources.transcripts import transcripts_df, transcripts_pdf
+from logparser_spark.strategies import merge_template_sets
 
 HDFS_LINES = [
     "Receiving block blk_-160899 src: /10.250.19.102:54106 dest: /10.250.19.102:50010",
@@ -73,8 +73,8 @@ def test_logsig_fit_order_free():
 def test_logsig_merge_canonical():
     _, clusters = logsig_parse_sequential(HDFS_LINES, LogSigParams(k=3))
     pairs = [(c.template, c.count) for c in clusters]
-    a = merge_logsig_sets([pairs], LogSigParams(k=3))
-    b = merge_logsig_sets([list(reversed(pairs))], LogSigParams(k=3))
+    a = merge_template_sets([pairs], "logsig", LogSigParams(k=3))
+    b = merge_template_sets([list(reversed(pairs))], "logsig", LogSigParams(k=3))
     assert sorted(c.template for c in a) == sorted(c.template for c in b)
     assert sum(c.count for c in a) == len(HDFS_LINES)
 

@@ -51,6 +51,32 @@ def test_unknown_strategy_fails_before_falling_back_to_drain(spark):
         assign_templates(df, [], strategy="Spell")
 
 
+def test_wrong_params_type_fails_before_any_job(spark):
+    """A params object of another strategy's type raises TypeError up
+    front; the frame raises on evaluation, so any Spark job (the batch
+    cap pre-pass, the mine, the assign) would surface as a Spark error
+    instead."""
+    from logparser_spark.config import DrainParams
+    from logparser_spark.logsig import LogSigParams
+    from logparser_spark.spell import SpellParams
+
+    df = spark.range(10).select(
+        F.lit("c").alias("conv_id"),
+        F.col("id").cast("int").alias("turn_idx"),
+        F.raise_error(F.lit("no Spark job may run")).cast("string").alias("text"),
+    )
+    with pytest.raises(TypeError, match="'iplom' takes IPLoMParams, got SpellParams"):
+        mine_templates(df, strategy="iplom", strategy_params=SpellParams())
+    with pytest.raises(TypeError, match="'spell' takes SpellParams, got LogSigParams"):
+        mine_templates(df, strategy="spell", strategy_params=LogSigParams())
+    with pytest.raises(TypeError, match="not strategy_params \\(got SpellParams\\)"):
+        assign_templates(df, [], strategy="drain", strategy_params=SpellParams()).collect()
+    # Drain's one DrainParams source is cfg.drain / params (masking reads
+    # it too), so even its own type is refused as strategy_params
+    with pytest.raises(TypeError, match="not strategy_params \\(got DrainParams\\)"):
+        mine_templates(df, strategy="drain", strategy_params=DrainParams(st=0.9))
+
+
 def test_online_kernels_unaffected_by_cap(spark):
     # drain's collect is per-partition template SETS, not texts — the
     # guard must not fire for online kernels even on a miss corpus

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import json
+import os
 import shutil
 import tempfile
 
@@ -9,7 +11,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from logparser_spark.config import PipelineConfig
-from logparser_spark.plans.manifest import committed_buckets, read_manifest
+from logparser_spark.plans.manifest import (
+    committed_buckets,
+    frozen_strategy,
+    load_templates,
+    read_manifest,
+)
 from logparser_spark.plans.pipeline import aggregates_from_routed, run_pipeline
 from logparser_spark.sources.transcripts import transcripts_df
 
@@ -77,6 +84,37 @@ def test_kill_and_resume_is_exact(spark, tdf):
         assert len(got) == N                 # no dupes, no losses
     finally:
         shutil.rmtree(ref_out, ignore_errors=True)
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_resume_with_another_strategy_fails(spark, tdf):
+    """The frozen templates record the strategy that mined them: resuming
+    a Spell run with Drain must fail, not match the Spell templates with
+    Drain's matcher."""
+    out = tempfile.mkdtemp(prefix="pipe_strategy_")
+    try:
+        with pytest.raises(RuntimeError, match="injected failure"):
+            run_pipeline(spark, tdf, out, CFG, fail_after_buckets=3, strategy="spell")
+        with pytest.raises(ValueError, match="mined with strategy 'spell'"):
+            run_pipeline(spark, tdf, out, CFG, strategy="drain")
+        assert len(committed_buckets(spark, out)) == 3
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_templates_without_strategy_are_refused(spark, tdf):
+    """A bare-list ``_templates.json`` (no recorded strategy) cannot be
+    resumed unchecked: loading it, or resuming over it, raises."""
+    out = tempfile.mkdtemp(prefix="pipe_bare_")
+    try:
+        with open(os.path.join(out, "_templates.json"), "w") as f:
+            json.dump([{"template": "a <*>", "count": 2}], f)
+        for read in (load_templates, frozen_strategy):
+            with pytest.raises(ValueError, match="records no strategy"):
+                read(out)
+        with pytest.raises(ValueError, match="records no strategy"):
+            run_pipeline(spark, tdf, out, CFG, strategy="drain")
+    finally:
         shutil.rmtree(out, ignore_errors=True)
 
 

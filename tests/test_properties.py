@@ -15,10 +15,10 @@ from logparser_spark.drain import (
     compile_rex,
     event_id_of,
     mask_text,
-    merge_template_sets,
     parse_sequential,
     tokenize,
 )
+from logparser_spark.strategies import merge_template_sets
 
 PATTERNS = compile_rex(DrainParams().rex)
 
@@ -59,10 +59,10 @@ def test_assignment_matcher_agrees_with_oracle(lines):
     in."""
     import numpy as np
 
-    from logparser_spark.operators.assign import _Matcher
+    from logparser_spark.matchers import DrainMatcher
 
     recs, clusters = parse_sequential(lines)
-    matcher = _Matcher(sorted(c.template for c in clusters), DrainParams(), False)
+    matcher = DrainMatcher(sorted(c.template for c in clusters), DrainParams(), False)
     masked = np.array([mask_text(t, PATTERNS) for t in lines], dtype=object)
     results = matcher.match_unique(masked)
     for rec, (tpl, eid, matched) in zip(recs, results):
@@ -102,12 +102,13 @@ def test_batch_params_equal_rowwise_extract(lines):
     import pandas as pd
 
     from logparser_spark.drain import extract_parameters
-    from logparser_spark.operators.assign import _Matcher, _match_batch
+    from logparser_spark.matchers import DrainMatcher
+    from logparser_spark.operators.assign import _match_batch
 
     _recs, clusters = parse_sequential(lines)
     # a template outside the batch leaves some rows unmatched
     templates = sorted({c.template for c in clusters} - {clusters[0].template})
-    matcher = _Matcher(templates, DrainParams(), True)
+    matcher = DrainMatcher(templates, DrainParams(), True)
     texts = pd.Series([*lines, None], dtype=object)
     masked = pd.Series([mask_text(t, PATTERNS) for t in lines] + [None], dtype=object)
     out = _match_batch(matcher, masked, texts)

@@ -14,12 +14,12 @@ from logparser_spark.shiso import (
     ShisoParams,
     ShisoTree,
     log_dist,
-    merge_shiso_sets,
     shiso_parse_sequential,
     word_dist,
     word_vec,
 )
 from logparser_spark.sources.transcripts import transcripts_df, transcripts_pdf
+from logparser_spark.strategies import merge_template_sets
 
 HDFS_LINES = [
     "Receiving block blk_-160899 src: /10.250.19.102:54106 dest: /10.250.19.102:50010",
@@ -80,8 +80,8 @@ def test_shiso_format_update_wildcards_mismatches():
 def test_shiso_merge_canonical():
     _, clusters = shiso_parse_sequential(HDFS_LINES)
     pairs = [(c.template, c.count) for c in clusters]
-    a = merge_shiso_sets([pairs])
-    b = merge_shiso_sets([list(reversed(pairs))])
+    a = merge_template_sets([pairs], "shiso")
+    b = merge_template_sets([list(reversed(pairs))], "shiso")
     assert sorted(c.template for c in a) == sorted(c.template for c in b)
     assert sum(c.count for c in a) == len(HDFS_LINES)
 

@@ -10,11 +10,12 @@ from logparser_spark.operators.mine import mine_templates
 from logparser_spark.sources.transcripts import transcripts_df, transcripts_pdf
 from logparser_spark.spell import (
     SpellMap,
+    SpellParams,
     align_template,
     lcs,
-    merge_spell_sets,
     spell_parse_sequential,
 )
+from logparser_spark.strategies import merge_template_sets
 
 HDFS_LINES = [
     "Receiving block blk_-160899 src: /10.250.19.102:54106 dest: /10.250.19.102:50010",
@@ -55,8 +56,8 @@ def test_spell_tau_rejects_dissimilar():
 def test_spell_merge_deterministic_and_count_conserving():
     _, clusters = spell_parse_sequential(HDFS_LINES)
     pairs = [(c.template, c.count) for c in clusters]
-    merged_a = merge_spell_sets([pairs])
-    merged_b = merge_spell_sets([list(reversed(pairs))])
+    merged_a = merge_template_sets([pairs], "spell")
+    merged_b = merge_template_sets([list(reversed(pairs))], "spell")
     assert sorted(c.template for c in merged_a) == sorted(c.template for c in merged_b)
     assert sum(c.count for c in merged_a) == len(HDFS_LINES)
 
@@ -87,6 +88,34 @@ def test_distributed_spell_matches_sequential_oracle(spark, tdf):
     )
     assert bool(got["matched"].all())
     assert got["event_id"].tolist() == [r["event_id"] for r in recs]
+
+
+def test_spell_params_reach_kernel_merge_and_matcher(spark, tdf):
+    """``strategy_params`` is not silently dropped: a looser ``tau``
+    changes the mined set, and a stricter one changes what the matcher
+    accepts."""
+    cfg = PipelineConfig(num_partitions=8)
+    loose = SpellParams(tau=0.3)
+    mined = mine_templates(tdf, cfg, strategy="spell", strategy_params=loose)
+    texts = (
+        transcripts_pdf(2000, 30, 20)
+        .sort_values(["conv_id", "turn_idx"], kind="stable")["text"]
+        .tolist()
+    )
+    # the default-tau mine equals this oracle (test above)
+    _, default_clusters = spell_parse_sequential(texts)
+    assert sorted(c.template for c in mined) != sorted(
+        c.template for c in default_clusters
+    )
+
+    def matched(params):
+        return assign_templates(
+            tdf, mined, cfg.drain, with_params=False, strategy="spell",
+            strategy_params=params,
+        ).filter("matched").count()
+
+    assert matched(loose) == 2000
+    assert matched(SpellParams(tau=0.9)) < 2000
 
 
 def test_streaming_assign_uses_the_mining_strategy(spark, tdf):
