@@ -79,9 +79,7 @@ def main() -> None:
         from logparser_spark.operators.mine import mine_templates
         from logparser_spark.streaming.stream import (
             read_transcript_stream,
-            streaming_assign,
-            streaming_route_write,
-            streaming_sink_counts,
+            run_streaming_pipeline,
         )
 
         # mine-offline/assign-online: the template KB is fit once from a
@@ -90,23 +88,10 @@ def main() -> None:
             transcripts, cfg, sample_one_in=args.mine_sample_one_in,
             strategy=args.strategy,
         )
-        routed = streaming_assign(
-            read_transcript_stream(spark, args.input), clusters, cfg,
-            strategy=args.strategy,
-        )
-        q_route = streaming_route_write(
-            routed, f"{args.out}/routed", f"{args.out}/_ckpt/route", cfg
+        q_route, q_agg = run_streaming_pipeline(
+            spark, args.input, args.out, clusters, cfg, strategy=args.strategy
         )
         agg_path = f"{args.out}/agg_sink_window"
-        q_agg = (
-            streaming_sink_counts(routed, cfg)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", agg_path)
-            .option("checkpointLocation", f"{args.out}/_ckpt/agg")
-            .trigger(availableNow=True)
-            .start()
-        )
         cur_path = None
         if args.stream_curation:
             from logparser_spark.streaming.stream import streaming_curation_write

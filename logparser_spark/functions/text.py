@@ -6,21 +6,10 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def _c(col: Column | str) -> Column:
-    return F.col(col) if isinstance(col, str) else col
-
-
 def tokens_expr(col: Column | str) -> Column:
     """Whitespace tokenization matching the reference's
     ``content.strip().split()`` (``Drain/Drain.py`` ≈L268): trim, split on
     runs of whitespace, drop empties (split of '' yields [''])."""
-    return F.filter(F.split(F.trim(_c(col)), r"\s+"), lambda t: t != F.lit(""))
+    c = F.col(col) if isinstance(col, str) else col
+    return F.filter(F.split(F.trim(c), r"\s+"), lambda t: t != F.lit(""))
 
-
-def token_count_expr(col: Column | str) -> Column:
-    return F.size(tokens_expr(col))
-
-
-def has_digit_expr(col: Column | str) -> Column:
-    """P3 digit predicate (reference ``hasNumbers`` ≈L52)."""
-    return _c(col).rlike(r"\d")

@@ -432,7 +432,6 @@ def duplicate_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iters: int = 25,
-    on_nonconverged: str = "error",
     strategy: str = "label_prop",
 ) -> DataFrame:
     """Resolve near-dup PAIRS into duplicate CLUSTERS: connected
@@ -549,18 +548,13 @@ def duplicate_clusters(
         # clusters — a silently wrong answer (and an opaque downstream
         # hash-gate failure vs the exact recursive-CTE twin).  Mirror the
         # loud-failure policy of mine_templates/lke_fit.
-        msg = (
+        raise RuntimeError(
             f"duplicate_clusters: min-label propagation did not reach the "
             f"fixpoint within max_iters={max_iters} rounds — a component "
             f"with diameter > {max_iters} exists; raise max_iters (or "
             "switch to the large-star/small-star variant for adversarial "
             "chain graphs)"
         )
-        if on_nonconverged == "error":
-            raise RuntimeError(msg)
-        import warnings
-
-        warnings.warn(msg, RuntimeWarning, stacklevel=2)
     return labels.select(
         F.col("node").alias("member_id"), F.col("label").alias("cluster_id")
     )

@@ -36,8 +36,9 @@ def with_sink_id(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
 
 
 def route_write(df: DataFrame, path: str, cfg: PipelineConfig | None = None) -> None:
-    """One-pass fan-out write, partitioned by ``ckpt_bucket`` (when the
-    frame carries the resume bucket) and then ``sink_id``.
+    """One-pass fan-out write, partitioned by the frame's commit-unit
+    column (``ckpt_bucket`` for the resumable batch job, ``batch_id`` for
+    a streaming micro-batch) when it has one, and then ``sink_id``.
 
     An AQE REBALANCE on the partition columns clusters rows so each task
     writes ~1 directory instead of every task writing every directory —
@@ -45,7 +46,9 @@ def route_write(df: DataFrame, path: str, cfg: PipelineConfig | None = None) -> 
     an oversized sink across tasks by mapper ranges, so a dominant
     conversation cannot pin one write task, and small sinks coalesce
     together.  Overwrite is dynamic and scoped to this write: only the
-    partitions written are replaced, and the session conf is untouched.
+    partitions written are replaced (so a re-run bucket or a replayed
+    epoch rewrites its own directories), and the session conf is
+    untouched.
     """
     cfg = cfg or PipelineConfig()
     if "sink_id" not in df.columns:
@@ -54,7 +57,8 @@ def route_write(df: DataFrame, path: str, cfg: PipelineConfig | None = None) -> 
     # the write-side shuffle or persist it to sinks
     if "masked" in df.columns:
         df = df.drop("masked")
-    parts = [c for c in ("ckpt_bucket", "sink_id") if c in df.columns]
+    parts = [c for c in ("ckpt_bucket", "batch_id") if c in df.columns]
+    parts.append("sink_id")
     (
         df.hint("rebalance", *parts)
         .write.format(cfg.sink_format)

@@ -535,8 +535,7 @@ def ivf_assign(
 
     Broadcast nested-loop over the tiny centroid table (k rows) with a
     per-id argmin window — expression-only, Catalyst-visible, and the
-    form the SQL twin mirrors.  For large k prefer
-    :func:`ivf_assign_batched` (one numpy matmul per Arrow batch).
+    form the SQL twin mirrors.
     """
     v = vecs.select(
         F.col(id_col).alias("_aid"), _as_double(F.col(vec_col)).alias("_avec")
@@ -550,42 +549,6 @@ def ivf_assign(
         .filter(F.col("_rn") == 1)
         .select(F.col("_aid").alias(id_col if id_col != "_id" else "_id"), "centroid_id")
     )
-
-
-def ivf_assign_batched(
-    vecs: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Scale-path assignment: argmin over a (batch x dim) @ (dim x k)
-    numpy matmul per Arrow batch via ``mapInPandas`` — no k-fold row
-    blowup, one BLAS call per batch.  Bit-equal to :func:`ivf_assign`
-    (squared-L2 expanded as |v|^2 - 2 v.c + |c|^2 ranks identically;
-    ties broken on centroid index) — pinned by a test.
-    """
-    import numpy as np
-    import pandas as pd
-
-    cmat = np.asarray(centroids, dtype=np.float64)  # (k, dim)
-
-    def _assign(batches):
-        for pdf in batches:
-            mat = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
-            )  # (n, dim)
-            # full (x-c)^2 sum, not the expanded form: identical floating
-            # ops to the expression path's ordered fold is NOT needed for
-            # argmin equality (distances differ by <1 ulp only when tied
-            # on value; tie-break below is on index either way), but the
-            # direct form keeps the comparison honest on the test fixture
-            d2 = ((mat[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=2)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col], "centroid_id": d2.argmin(axis=1)}
-            )
-
-    out_schema = f"{id_col} long, centroid_id int"
-    return vecs.select(id_col, vec_col).mapInPandas(_assign, out_schema)
 
 
 def ann_ivf_topk(

@@ -8,8 +8,10 @@ The same operators compose unchanged onto a streaming DataFrame:
   mined offline in batch — the standard mine-offline/assign-online split);
 * aggregation is a watermarked event-time tumbling window, so late turns
   beyond the watermark are dropped deterministically and state is bounded;
-* the sink is parquet-append with a checkpointLocation, giving
-  exactly-once per micro-batch on a real cluster.
+* the routed fan-out is the batch ``route_write`` run once per epoch via
+  ``foreachBatch``: each micro-batch overwrites its own ``batch_id=<epoch>``
+  partitions, so with the checkpointLocation a replayed epoch rewrites
+  the same rows instead of appending duplicates.
 
 Tested with ``trigger(availableNow=True)`` over a parquet directory —
 same code path a Kafka/files source would take.
@@ -23,7 +25,7 @@ from pyspark.sql import functions as F
 from logparser_spark.config import PipelineConfig
 from logparser_spark.drain import Cluster
 from logparser_spark.operators.assign import assign_templates
-from logparser_spark.operators.route import with_sink_id
+from logparser_spark.operators.route import route_write, with_sink_id
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -32,6 +34,17 @@ TRANSCRIPT_SCHEMA = (
 
 def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(path)
+
+
+def _require_utc(stream: DataFrame, name: str) -> None:
+    """The pandas state functions below turn naive session-local
+    timestamps into epoch ms, which is only right in a UTC session."""
+    tz = stream.sparkSession.conf.get("spark.sql.session.timeZone")
+    if tz != "UTC":
+        raise ValueError(
+            f"{name} needs spark.sql.session.timeZone=UTC (session has {tz!r}): "
+            "its event-time timeouts would be off by the zone's offset"
+        )
 
 
 def streaming_assign(
@@ -94,6 +107,7 @@ def streaming_sessionize(
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    _require_utc(stream, "streaming_sessionize")
     gap_ms = gap_minutes * 60 * 1000
     out_schema = (
         f"{key_col} string, session_start timestamp, session_end timestamp, "
@@ -176,39 +190,23 @@ def streaming_route_write(
     cfg: PipelineConfig | None = None,
     available_now: bool = True,
 ):
-    """Streaming sibling of batch ``operators.route.route_write``:
-    continuous one-pass fan-out of routed rows into per-sink parquet
-    directories.
+    """Streaming fan-out: each micro-batch runs the batch
+    ``operators.route.route_write`` via ``foreachBatch``, tagged
+    ``batch_id=<epoch>``, so rows land in ``batch_id=N/sink_id=S``.
 
-    Rows cluster by a fixed hash of ``(sink_id, hash(conv_id, turn_idx)
-    sub-bucket)`` before the partitioned sink, so each micro-batch task
-    writes ~1 sink directory (files per trigger scale with tasks, not
-    tasks × sinks).  The batch writer's REBALANCE is not used here:
-    micro-batches run without AQE, so nothing would split an oversized
-    sink at runtime, and the sub-bucket is what keeps a dominant
-    conversation from pinning one write task.  The
-    ``checkpointLocation`` gives exactly-once parquet appends per
-    micro-batch; restarting from the same checkpoint skips committed
-    batches — the streaming analog of the batch resume ledger.
+    A ``foreachBatch`` frame is a batch plan, so the write gets the batch
+    job's AQE REBALANCE (here on batch_id, sink_id).  Each epoch
+    dynamically overwrites only its own partitions, so a replayed epoch
+    (the at-least-once case ``foreachBatch`` documents) rewrites its rows
+    instead of appending duplicates; restarting from the same
+    ``checkpoint_path`` skips committed epochs.
     """
-    cfg = cfg or PipelineConfig()
-    df = routed
-    if "sink_id" not in df.columns:
-        df = with_sink_id(df, cfg)
-    if "masked" in df.columns:
-        df = df.drop("masked")
-    sub_buckets = max(cfg.num_partitions // 8, 1)
-    clustered = df.repartition(
-        cfg.num_partitions,
-        F.col("sink_id"),
-        F.pmod(F.hash("conv_id", "turn_idx"), F.lit(sub_buckets)),
-    )
-    writer = (
-        clustered.writeStream.outputMode("append")
-        .format(cfg.sink_format)
-        .partitionBy("sink_id")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint_path)
+
+    def _route(batch_df: DataFrame, batch_id: int) -> None:
+        route_write(batch_df.withColumn("batch_id", F.lit(batch_id)), path, cfg)
+
+    writer = routed.writeStream.foreachBatch(_route).option(
+        "checkpointLocation", checkpoint_path
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
@@ -218,27 +216,34 @@ def streaming_route_write(
 def run_streaming_pipeline(
     spark: SparkSession,
     in_path: str,
-    out_path: str,
-    checkpoint_path: str,
+    out: str,
     clusters: list[Cluster],
     cfg: PipelineConfig | None = None,
+    strategy: str = "drain",
     available_now: bool = True,
 ):
-    """Wire source → assign → windowed counts → parquet sink; returns the
-    started StreamingQuery (caller awaits termination)."""
+    """Wire source → assign (with the ``strategy`` that mined
+    ``clusters``) → two queries: the routed fan-out into ``<out>/routed``
+    and the windowed per-sink counts into ``<out>/agg_sink_window``, with
+    checkpoints under ``<out>/_ckpt/``.  Returns both started queries
+    ``(route, agg)``; the caller awaits termination."""
     cfg = cfg or PipelineConfig()
-    stream = read_transcript_stream(spark, in_path)
-    routed = streaming_assign(stream, clusters, cfg)
-    counts = streaming_sink_counts(routed, cfg)
+    routed = streaming_assign(
+        read_transcript_stream(spark, in_path), clusters, cfg, strategy=strategy
+    )
+    q_route = streaming_route_write(
+        routed, f"{out}/routed", f"{out}/_ckpt/route", cfg, available_now
+    )
     writer = (
-        counts.writeStream.outputMode("append")
+        streaming_sink_counts(routed, cfg)
+        .writeStream.outputMode("append")
         .format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint_path)
+        .option("path", f"{out}/agg_sink_window")
+        .option("checkpointLocation", f"{out}/_ckpt/agg")
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return q_route, writer.start()
 
 
 def streaming_cms_cells(
@@ -408,6 +413,7 @@ def streaming_quantile_cells(
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    _require_utc(stream, "streaming_quantile_cells")
     win_ms = window_minutes * 60 * 1000
     key_schema = ", ".join(f"{c} string" for c in keys)
     out_schema = (
@@ -521,6 +527,7 @@ def streaming_bm25_cells(
 
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    _require_utc(stream, "streaming_bm25_cells")
     win_ms = window_minutes * 60 * 1000
     qset = frozenset(query_terms)
     tok_re = re.compile(r"[^ \t\n\x0b\f\r]+")
@@ -616,7 +623,8 @@ def streaming_incremental_dedup_write(
     """Continuous-ingest near-dup admission control: each micro-batch is
     deduped against everything ALREADY ADMITTED (and against itself) via
     :func:`~logparser_spark.operators.dedup.incremental_dedup`, and its
-    survivors are appended to the canonical corpus — the streaming form
+    survivors join the canonical corpus as that epoch's partition
+    (per-epoch overwrite, not an append) — the streaming form
     of the per-crawl/per-delivery dedup a training-data pipeline runs at
     ingest.
 
@@ -656,7 +664,12 @@ def streaming_incremental_dedup_write(
                 .filter(F.col("batch_id") < F.lit(batch_id))
                 .select(id_col, text_col)
             )
-        except AnalysisException:  # first epoch: corpus dir not yet created
+        except AnalysisException as e:
+            # only the first epoch's missing corpus dir means "empty
+            # corpus"; any other analysis error (a foreign file at the
+            # path, a schema without the text column) fails the query
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             corpus = spark.createDataFrame([], new.schema)
         admitted = incremental_dedup(
             new, corpus, id_col=id_col, text_col=text_col, **dedup_kw

@@ -291,24 +291,6 @@ def test_ivf_probe_more_cells_monotone_recall(spark, emb):
     assert recall(4) <= recall(8)
 
 
-def test_ivf_assign_batched_matches_expression_path(spark, emb):
-    from logparser_spark.operators.similarity import (
-        ivf_assign,
-        ivf_assign_batched,
-        ivf_centroids,
-    )
-
-    cents = ivf_centroids(emb, n_centroids=8, iters=1)
-    rows = sorted(cents.collect(), key=lambda r: r["centroid_id"])
-    expr = ivf_assign(emb, cents).toPandas().sort_values("vec_id")
-    batched = (
-        ivf_assign_batched(emb, [r["cvec"] for r in rows])
-        .toPandas()
-        .sort_values("vec_id")
-    )
-    assert list(expr["centroid_id"]) == list(batched["centroid_id"])
-
-
 def test_ivf_centroids_refinement_changes_and_drops_empty(spark, emb):
     from logparser_spark.operators.similarity import ivf_centroids
 

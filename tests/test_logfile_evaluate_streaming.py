@@ -4,8 +4,11 @@ Structured Streaming pipeline variant."""
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import tempfile
+from collections import Counter
+from types import SimpleNamespace
 
 import duckdb
 import pandas as pd
@@ -17,7 +20,12 @@ from logparser_spark.operators.evaluate import grouping_accuracy, grouping_accur
 from logparser_spark.operators.mine import mine_templates
 from logparser_spark.sources.logfile import compile_log_format, read_log_file
 from logparser_spark.sources.transcripts import transcripts_df
-from logparser_spark.streaming.stream import TRANSCRIPT_SCHEMA, run_streaming_pipeline
+from logparser_spark.streaming.stream import (
+    TRANSCRIPT_SCHEMA,
+    run_streaming_pipeline,
+    streaming_assign,
+    streaming_route_write,
+)
 
 LOG_FORMAT = "<Date> <Time> <Pid> <Level> <Component>: <Content>"
 LINES = [
@@ -350,97 +358,141 @@ def test_streaming_sessionize_closed_match_batch(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-def test_streaming_pipeline_matches_batch(spark):
+@pytest.fixture(scope="module")
+def streamed(spark, tmp_path_factory):
+    """Two deliveries through the shipped streaming wiring
+    (``run_streaming_pipeline``, as ``jobs/run_pipeline.py --stream`` runs
+    it): turns before ``turn_idx`` 250, then the rest, each ingested by
+    its own availableNow run from the same checkpoints (epochs 0 and 1).
+    Every ``DataFrameWriter.save`` the runs make is recorded with its
+    analyzed plan."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     cfg = PipelineConfig(num_partitions=4)
-    tdf = transcripts_df(spark, 2000, 20, 0)
+    # 5 conversations → ~8 h of event time, so the 2 h watermark closes
+    # windows and the windowed counts are not vacuous
+    tdf = transcripts_df(spark, 2000, 5, 0)
     clusters = mine_templates(tdf, cfg)
+    deliveries = [tdf.filter("turn_idx < 250"), tdf.filter("turn_idx >= 250")]
+    d = str(tmp_path_factory.mktemp("stream"))
+    in_path, out = os.path.join(d, "in"), os.path.join(d, "out")
+    saves = []
+    save = DataFrameWriter.save
 
-    d = tempfile.mkdtemp()
-    try:
-        in_path, out_path, ckpt = (os.path.join(d, x) for x in ("in", "out", "ckpt"))
-        tdf.write.parquet(in_path)
-        q = run_streaming_pipeline(spark, in_path, out_path, ckpt, clusters, cfg)
-        q.awaitTermination(120)
+    def spy(self, path=None, *args, **kwargs):
+        saves.append((path, self._df._jdf.queryExecution().analyzed().toString()))
+        return save(self, path, *args, **kwargs)
 
-        got = spark.read.parquet(out_path)
-        # batch equivalent over the same input
-        from logparser_spark.streaming.stream import streaming_assign
-
-        routed = streaming_assign(spark.read.parquet(in_path), clusters, cfg)
-        batch = routed.groupBy(
-            F.window("ts", cfg.window_duration)["start"].alias("win_start"),
-            "sink_id",
-            "event_id",
-        ).agg(F.count(F.lit(1)).alias("n_turns"))
-
-        # append mode emits only watermark-closed windows → emitted rows
-        # must be a consistent subset of the batch result
-        merged = got.join(
-            batch.withColumnRenamed("n_turns", "n_batch"),
-            ["win_start", "sink_id", "event_id"],
-            "inner",
-        )
-        assert merged.count() == got.count()
-        assert merged.filter("n_turns <> n_batch").count() == 0
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_streaming_route_write_matches_batch_and_resumes(spark):
-    """Streaming fan-out == batch route_write row-for-row (same sinks,
-    same rows), and restarting from the same checkpoint over an unchanged
-    source appends nothing (exactly-once per committed micro-batch)."""
-    from logparser_spark.operators.route import route_write
-    from logparser_spark.streaming.stream import (
-        streaming_assign,
-        streaming_route_write,
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameWriter, "save", spy)
+        for part in deliveries:
+            part.write.mode("append").parquet(in_path)
+            for q in run_streaming_pipeline(spark, in_path, out, clusters, cfg):
+                q.awaitTermination(180)
+    return SimpleNamespace(
+        cfg=cfg, clusters=clusters, deliveries=deliveries, dir=d,
+        in_path=in_path, out=out, saves=saves,
     )
 
-    cfg = PipelineConfig(num_partitions=4)
-    tdf = transcripts_df(spark, 2000, 20, 0)
-    clusters = mine_templates(tdf, cfg)
 
-    d = tempfile.mkdtemp()
-    try:
-        in_path, s_out, b_out, ckpt = (
-            os.path.join(d, x) for x in ("in", "sout", "bout", "ckpt")
+def test_streaming_pipeline_matches_batch(spark, streamed):
+    """Routed rows == batch route_write over the same input, and the
+    windowed counts == the batch counts of every window the final
+    watermark closed."""
+    from logparser_spark.operators.route import route_write
+
+    s = streamed
+    static = spark.read.parquet(s.in_path)
+    batch_routed = streaming_assign(static, s.clusters, s.cfg)
+    b_out = os.path.join(s.dir, "bout")
+    route_write(batch_routed, b_out, s.cfg)
+
+    got = spark.read.parquet(f"{s.out}/routed").drop("batch_id")
+    want = spark.read.parquet(b_out)
+    assert sorted(got.columns) == sorted(want.columns)
+    cols = sorted(got.columns)
+    assert got.select(*cols).exceptAll(want.select(*cols)).count() == 0
+    assert want.select(*cols).exceptAll(got.select(*cols)).count() == 0
+
+    # append mode emits a 1 h window once the watermark (max ts - 2 h)
+    # passes its end
+    max_ts = static.agg(F.max("ts")).first()[0]
+    closed = (
+        batch_routed.groupBy(
+            F.window("ts", s.cfg.window_duration)["start"].alias("win_start"),
+            "sink_id",
+            "event_id",
         )
-        tdf.write.parquet(in_path)
+        .agg(F.count(F.lit(1)).alias("n_turns"))
+        .filter(F.col("win_start") + F.expr("INTERVAL 3 HOURS") <= F.lit(max_ts))
+    )
+    agg = spark.read.parquet(f"{s.out}/agg_sink_window")
+    assert agg.count() > 0
+    assert agg.exceptAll(closed.select(*agg.columns)).count() == 0
+    assert closed.select(*agg.columns).exceptAll(agg).count() == 0
 
-        stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(in_path)
-        q = streaming_route_write(streaming_assign(stream, clusters, cfg), s_out, ckpt)
-        q.awaitTermination(120)
 
-        batch_routed = streaming_assign(spark.read.parquet(in_path), clusters, cfg)
-        route_write(batch_routed, b_out, cfg)
+def test_streaming_route_write_matches_batch_and_resumes(spark, streamed):
+    """Each epoch lands in its own ``batch_id=N/sink_id=S`` dirs and holds
+    exactly its delivery's turns (the second run resumed from the
+    checkpoint and re-ingested nothing); replaying the last epoch, as
+    after a crash between write and commit, rewrites its partitions and
+    leaves the rows unchanged."""
+    s = streamed
+    routed = f"{s.out}/routed"
 
-        got = spark.read.parquet(s_out)
-        want = spark.read.parquet(b_out)
-        assert sorted(got.columns) == sorted(want.columns)
-        cols = sorted(got.columns)
-        assert got.select(*cols).exceptAll(want.select(*cols)).count() == 0
-        assert want.select(*cols).exceptAll(got.select(*cols)).count() == 0
-        # per-sink directory layout matches (incl. dead if any)
-        sinks = lambda p: {  # noqa: E731
-            n for n in os.listdir(p) if n.startswith("sink_id=")
+    def layout():
+        return {
+            e: {
+                n: set(os.listdir(f"{routed}/{e}/{n}"))
+                for n in os.listdir(f"{routed}/{e}")
+                if n.startswith("sink_id=")
+            }
+            for e in os.listdir(routed)
+            if e.startswith("batch_id=")
         }
-        assert sinks(s_out) == sinks(b_out)
 
-        # resume: same checkpoint, unchanged source → no new rows
-        n = got.count()
-        q2 = streaming_route_write(
-            streaming_assign(
-                spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(in_path),
-                clusters,
-                cfg,
-            ),
-            s_out,
-            ckpt,
+    def rows():  # repr: the rows hold array columns, unhashable as tuples
+        return Counter(map(repr, spark.read.parquet(routed).collect()))
+
+    before = layout()
+    assert sorted(before) == ["batch_id=0", "batch_id=1"]
+    cols = ["conv_id", "turn_idx", "sink_id"]
+    got = spark.read.parquet(routed).select("batch_id", *cols).collect()
+    for epoch, part in enumerate(s.deliveries):
+        want = sorted(
+            map(tuple, streaming_assign(part, s.clusters, s.cfg).select(*cols).collect())
         )
-        q2.awaitTermination(120)
-        assert spark.read.parquet(s_out).count() == n
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        assert sorted(tuple(r[1:]) for r in got if r[0] == epoch) == want
+        assert set(before[f"batch_id={epoch}"]) == {f"sink_id={r[2]}" for r in want}
+
+    n_before = rows()
+    ckpt = f"{s.out}/_ckpt/route"
+    os.remove(os.path.join(ckpt, "commits", "1"))
+    # the local checksum FS keeps a .crc sidecar; a stale one makes the
+    # replayed commit's rename fail
+    os.remove(os.path.join(ckpt, "commits", ".1.crc"))
+    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(s.in_path)
+    streaming_route_write(
+        streaming_assign(stream, s.clusters, s.cfg), routed, ckpt, s.cfg
+    ).awaitTermination(180)
+    after = layout()
+    assert after["batch_id=0"] == before["batch_id=0"]
+    assert after["batch_id=1"].keys() == before["batch_id=1"].keys()
+    # the replayed epoch really ran: its files were replaced, not added to
+    for sink, files in after["batch_id=1"].items():
+        assert files.isdisjoint(before["batch_id=1"][sink]), sink
+    assert rows() == n_before
+
+
+def test_streaming_route_write_plans_rebalance(streamed):
+    """Every micro-batch writes through route_write: one save per epoch
+    into ``<out>/routed``, planned as an AQE REBALANCE on
+    (batch_id, sink_id), not a fixed hash repartition."""
+    assert [p for p, _ in streamed.saves] == [f"{streamed.out}/routed"] * 2
+    for _, plan in streamed.saves:
+        assert re.search(r"RebalancePartitions \[batch_id#\d+, sink_id#\d+\]", plan), plan
+        assert "RepartitionByExpression" not in plan, plan
 
 
 def test_streaming_cms_cells_equal_batch_sketch(spark):
@@ -866,3 +918,51 @@ def test_streaming_incremental_dedup_grows_canonical_corpus(spark):
         assert replayed == final
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_streaming_dedup_fails_on_a_foreign_corpus(spark):
+    """Only a missing corpus dir means "first epoch, empty corpus": a
+    parquet file at the corpus path without the text column fails the
+    query instead of admitting every doc against an empty corpus."""
+    from pyspark.errors import StreamingQueryException
+
+    from logparser_spark.streaming.stream import streaming_incremental_dedup_write
+
+    schema = "doc_id bigint, text string"
+    d = tempfile.mkdtemp()
+    try:
+        in_path, out_path = os.path.join(d, "in"), os.path.join(d, "out")
+        spark.createDataFrame([(1, "some text here")], schema).write.parquet(in_path)
+        spark.createDataFrame([(99,)], "doc_id bigint").write.parquet(out_path)
+        q = streaming_incremental_dedup_write(
+            spark.readStream.schema(schema).parquet(in_path), out_path
+        )
+        with pytest.raises(StreamingQueryException, match="UNRESOLVED_COLUMN"):
+            q.awaitTermination(180)
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+
+
+def test_stateful_twins_refuse_a_non_utc_session(spark, tmp_path):
+    """The pandas state functions compute epoch ms from naive
+    session-local timestamps: outside a UTC session they raise before
+    any query starts."""
+    from logparser_spark.streaming.stream import (
+        streaming_bm25_cells,
+        streaming_quantile_cells,
+        streaming_sessionize,
+    )
+
+    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(str(tmp_path))
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        with pytest.raises(ValueError, match="timeZone=UTC"):
+            streaming_sessionize(stream)
+        with pytest.raises(ValueError, match="timeZone=UTC"):
+            streaming_quantile_cells(stream, ["role"], "turn_idx", "conv_id")
+        with pytest.raises(ValueError, match="timeZone=UTC"):
+            streaming_bm25_cells(stream, ["cache"], id_col="conv_id")
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    assert not spark.streams.active

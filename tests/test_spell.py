@@ -118,18 +118,29 @@ def test_spell_params_reach_kernel_merge_and_matcher(spark, tdf):
     assert matched(SpellParams(tau=0.9)) < 2000
 
 
-def test_streaming_assign_uses_the_mining_strategy(spark, tdf):
-    """streaming_assign must match with the strategy that mined the
-    clusters (Spell here), not the default Drain matcher."""
-    from logparser_spark.streaming.stream import streaming_assign
+def test_streaming_assign_uses_the_mining_strategy(spark, tdf, tmp_path):
+    """The streaming job (run_streaming_pipeline, as run_pipeline.py
+    --stream runs it) must match with the strategy that mined the
+    clusters (Spell here), not the default Drain matcher.  Spell's <*>
+    spans a variable number of tokens; the Drain matcher needs the
+    template's token count, so it would leave the long-name turns dead."""
+    from pyspark.sql import functions as F
+
+    from logparser_spark.streaming.stream import run_streaming_pipeline
 
     cfg = PipelineConfig(num_partitions=8)
-    mined = mine_templates(tdf, cfg, strategy="spell")
+    name = F.when(F.col("turn_idx") % 2 == 0, "alice").otherwise("bob van der berg")
+    login = F.concat(F.lit("session opened for user "), name, F.lit(" by admin"))
+    turns = tdf.withColumn(
+        "text", F.when(F.col("turn_idx") % 5 == 0, login).otherwise(F.col("text"))
+    )
+    mined = mine_templates(turns, cfg, strategy="spell")
+    in_path, out = str(tmp_path / "in"), str(tmp_path / "out")
+    turns.write.parquet(in_path)
+    for q in run_streaming_pipeline(spark, in_path, out, mined, cfg, strategy="spell"):
+        q.awaitTermination(180)
     cols = ["conv_id", "turn_idx", "event_id", "matched"]
-
-    def rows(df):
-        return df.select(*cols).orderBy("conv_id", "turn_idx").toPandas()
-
-    want = rows(assign_templates(tdf, mined, cfg.drain, strategy="spell"))
-    got = rows(streaming_assign(tdf, mined, cfg, strategy="spell"))
-    assert got.equals(want)
+    got = spark.read.parquet(f"{out}/routed").select(*cols)
+    want = assign_templates(turns, mined, cfg.drain, strategy="spell").select(*cols)
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
