@@ -31,6 +31,11 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _mem_total_mb() -> int:
+    with open("/proc/meminfo") as f:
+        return next(int(l.split()[1]) for l in f if l.startswith("MemTotal:")) // 1024
+
+
 def _sf_of(sf_dir: str) -> float:
     for tag, v in (("sf0.001", 0.001), ("sf0.01", 0.01), ("sf0.1", 0.1)):
         if tag in sf_dir:
@@ -95,7 +100,8 @@ def build_spark(cpus: int, executors: int = 0):
         # default yields 2.5-wave stages at bench sizes — on a real
         # cluster keep 64-128MB, the task count is thousands either way)
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "24MB")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",  # default: a quarter of host memory
+                os.environ.get("SPARK_DRIVER_MEM", f"{max(1024, _mem_total_mb() // 4)}m"))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
@@ -425,12 +431,12 @@ def run_interference(sf_dir: str, cpus: int = 4, n_legs: int = 4,
     """
     leg_cmd = [sys.executable, __file__, "--cpus", str(cpus), "--sf-dir", sf_dir,
                "--turns", str(n_turns), "--pipeline-only"]
-    # keep the concurrent fleet inside the 128 GiB box: 20g/leg at <=4 legs
-    # (the r3 shape), shrink proportionally beyond that.  NEVER floor the
-    # per-leg size above 96/n_legs — overcommit swaps and measures a fake
-    # floor (see BENCH/interference_8x2_12M_r5_memovercommit.json); a
-    # too-small leg fails loudly instead, which is the failure we want
-    mem_gb = max(2, min(20, 96 // n_legs))
+    # keep the concurrent fleet inside 3/4 of host memory: 20g/leg at <=4
+    # legs on the r3 128 GiB box, shrink proportionally beyond that.  NEVER
+    # floor the per-leg size above that share — overcommit swaps and
+    # measures a fake floor (see BENCH/interference_8x2_12M_r5_memovercommit.json);
+    # a too-small leg fails loudly instead, which is the failure we want
+    mem_gb = max(2, min(20, _mem_total_mb() * 3 // 4 // 1024 // n_legs))
     env = dict(os.environ, SPARK_DRIVER_MEM=f"{mem_gb}g")
 
     def parse(stdout: str) -> dict:

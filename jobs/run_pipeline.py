@@ -34,11 +34,11 @@ def main() -> None:
     ap.add_argument("--checkpoint-buckets", type=int, default=0)
     ap.add_argument("--strategy", default="drain", choices=STRATEGIES)
     ap.add_argument("--stream", action="store_true",
-                    help="continuous-ingest mode: mine templates from a batch "
-                         "read of --input, then run the streaming "
-                         "assign → route fan-out → windowed counts over it "
-                         "(availableNow trigger; checkpoints under <out>/_ckpt "
-                         "make re-runs resume, not recompute)")
+                    help="continuous-ingest mode: the batch job's body per "
+                         "micro-batch of --input (availableNow trigger); "
+                         "templates freeze on the first run, and the "
+                         "checkpoint under <out>/_ckpt plus the per-epoch "
+                         "ledger make re-runs resume, not recompute")
     ap.add_argument("--stream-curation", action="store_true",
                     help="with --stream: also run the curation operators "
                          "(Gopher repetition stats + decontamination vs an "
@@ -71,73 +71,47 @@ def main() -> None:
     else:
         raise SystemExit("need --input or --synthetic-turns")
 
+    agg_path = f"{args.out}/agg_sink_window"
+    report = {}
     if args.stream:
         if not args.input:
             raise SystemExit("--stream needs --input (a parquet directory source)")
-        from pyspark.sql import functions as F
+        from logparser_spark.streaming.stream import run_streaming_pipeline
 
-        from logparser_spark.operators.mine import mine_templates
-        from logparser_spark.streaming.stream import (
-            read_transcript_stream,
-            run_streaming_pipeline,
+        result = run_streaming_pipeline(
+            spark, args.input, args.out, cfg, strategy=args.strategy,
+            mine_sample_one_in=args.mine_sample_one_in,
         )
-
-        # mine-offline/assign-online: the template KB is fit once from a
-        # batch read (optionally sampled), then frozen into the stream
-        clusters = mine_templates(
-            transcripts, cfg, sample_one_in=args.mine_sample_one_in,
-            strategy=args.strategy,
-        )
-        q_route, q_agg = run_streaming_pipeline(
-            spark, args.input, args.out, clusters, cfg, strategy=args.strategy
-        )
-        agg_path = f"{args.out}/agg_sink_window"
-        cur_path = None
+        report["mode"] = "stream"
         if args.stream_curation:
-            from logparser_spark.streaming.stream import streaming_curation_write
+            from pyspark.sql import functions as F
+
+            from logparser_spark.streaming.stream import (
+                read_transcript_stream,
+                streaming_curation_write,
+            )
 
             # doc_id = stable per-turn key; eval set = a deterministic
             # 1-in-41 slice of the batch read (stands in for a real
             # benchmark table)
-            doc_stream = read_transcript_stream(spark, args.input).select(
-                F.xxhash64("conv_id", "turn_idx").alias("doc_id"),
-                F.col("text"),
+            doc_id = F.xxhash64("conv_id", "turn_idx")
+            docs = read_transcript_stream(spark, args.input).select(
+                doc_id.alias("doc_id"), "text"
             )
-            bench = transcripts.filter(
-                F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(41)) == 0
-            ).select("text")
+            bench = transcripts.filter(F.pmod(doc_id, F.lit(41)) == 0).select("text")
             cur_path = f"{args.out}/curated"
-            q_cur = streaming_curation_write(doc_stream, bench, cur_path)
-        q_route.awaitTermination()
-        q_agg.awaitTermination()
-        if args.stream_curation:
-            q_cur.awaitTermination()
-        print(
-            json.dumps(
-                {
-                    "mode": "stream",
-                    "routed_rows": spark.read.parquet(f"{args.out}/routed").count(),
-                    "n_templates": len(clusters),
-                    "agg_path": agg_path,
-                    # guard: an all-empty-batch stream never creates the dir
-                    "curated_rows": (
-                        spark.read.parquet(cur_path).count()
-                        if cur_path and os.path.isdir(cur_path)
-                        else (0 if cur_path else None)
-                    ),
-                }
+            streaming_curation_write(docs, bench, cur_path).awaitTermination()
+            # guard: an all-empty-batch stream never creates the dir
+            report["curated_rows"] = (
+                spark.read.parquet(cur_path).count() if os.path.isdir(cur_path) else 0
             )
+    else:
+        result = run_pipeline(
+            spark, transcripts, args.out, cfg,
+            mine_sample_one_in=args.mine_sample_one_in, strategy=args.strategy,
         )
-        spark.stop()
-        return
-
-    result = run_pipeline(
-        spark, transcripts, args.out, cfg,
-        mine_sample_one_in=args.mine_sample_one_in, strategy=args.strategy,
-    )
-    swc, twc = aggregates_from_routed(spark, result, cfg)
-    agg_path = f"{args.out}/agg_sink_window"
-    swc.write.mode("overwrite").parquet(agg_path)
+        swc, _twc = aggregates_from_routed(spark, result, cfg)
+        swc.write.mode("overwrite").parquet(agg_path)
     print(
         json.dumps(
             {
@@ -148,6 +122,7 @@ def main() -> None:
                 "buckets_skipped": len(result.buckets_skipped),
                 "wall_sec": round(result.wall_sec, 2),
                 "agg_path": agg_path,
+                **report,
             }
         )
     )

@@ -155,6 +155,10 @@ def bm25_topk_from_cells(
     IEEE double ops on the same exact-integer inputs — so a finalized
     window's top-k equals batch :func:`bm25_topk` over that window's
     documents EXACTLY, not approximately (pinned by test).
+
+    ``queries`` must be the frame the cells' stream was seeded with:
+    ``streaming_bm25_cells`` keeps matched rows only for its queries'
+    terms, so a term it was not given has no cells here and adds 0.
     """
     from pyspark.sql import Window
 

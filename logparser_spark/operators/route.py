@@ -35,6 +35,12 @@ def with_sink_id(df: DataFrame, cfg: PipelineConfig | None = None) -> DataFrame:
     return df.withColumn("sink_id", sink)
 
 
+def commit_unit(df: DataFrame) -> str | None:
+    """``ckpt_bucket`` (batch) or ``batch_id`` (stream epoch), the column
+    the routed write partitions on and the ledger keys its rows by."""
+    return next((c for c in ("ckpt_bucket", "batch_id") if c in df.columns), None)
+
+
 def route_write(df: DataFrame, path: str, cfg: PipelineConfig | None = None) -> None:
     """One-pass fan-out write, partitioned by the frame's commit-unit
     column (``ckpt_bucket`` for the resumable batch job, ``batch_id`` for
@@ -57,8 +63,8 @@ def route_write(df: DataFrame, path: str, cfg: PipelineConfig | None = None) -> 
     # the write-side shuffle or persist it to sinks
     if "masked" in df.columns:
         df = df.drop("masked")
-    parts = [c for c in ("ckpt_bucket", "batch_id") if c in df.columns]
-    parts.append("sink_id")
+    unit = commit_unit(df)
+    parts = [unit, "sink_id"] if unit else ["sink_id"]
     (
         df.hint("rebalance", *parts)
         .write.format(cfg.sink_format)

@@ -5,13 +5,18 @@ and metrics emitted per partition".  Unit of checkpointing is a
 deterministic md5 bucket of ``conv_id`` (``ckpt_bucket``) so the same row
 always lands in the same bucket across runs and engines.
 
+The streaming job checkpoints per epoch (``batch_id``) instead; the
+ledger keys its rows by the commit-unit column the routed write
+partitions on (:func:`~logparser_spark.operators.route.commit_unit`).
+
 Layout under the pipeline output root::
 
-    <out>/routed/ckpt_bucket=N/sink_id=S/*.parquet   (dynamic overwrite)
+    <out>/routed/ckpt_bucket=N/sink_id=S/*.parquet   (dynamic overwrite;
+                                                      batch_id=N in a stream)
     <out>/_manifest/*.parquet                        (append-only ledger)
     <out>/_templates.json                            (frozen template set + strategy)
 
-A bucket is *committed* iff a manifest row exists for it.  The routed
+A unit is *committed* iff a manifest row exists for it.  The routed
 write uses dynamic partition overwrite, so a bucket that was half-written
 when a run died is cleanly replaced on resume, giving exactly-once
 per-bucket semantics without a transactional table format.  (On a real
@@ -37,9 +42,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logparser_spark.drain import Cluster
+from logparser_spark.operators.route import commit_unit
 
-MANIFEST_SCHEMA = (
-    "ckpt_bucket int, run_id string, routed_rows long, dead_rows long, "
+#: ledger columns after the leading ``<unit> int`` commit-unit column
+_METRICS_SCHEMA = (
+    "run_id string, routed_rows long, dead_rows long, "
     "n_sinks int, n_events int, min_conv string, max_conv string, "
     "checksum long, wall_sec double, committed_at_epoch long"
 )
@@ -49,29 +56,32 @@ def _manifest_dir(out_dir: str) -> str:
     return os.path.join(out_dir, "_manifest")
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
+def read_manifest(spark: SparkSession, out_dir: str,
+                  unit: str = "ckpt_bucket") -> DataFrame | None:
+    """The ledger, keyed by ``unit`` (``batch_id`` for a stream's)."""
     path = _manifest_dir(out_dir)
     if not os.path.exists(path):
         return None
     try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(path)
+        return spark.read.schema(f"{unit} int, {_METRICS_SCHEMA}").parquet(path)
     except Exception:
         return None
 
 
-def committed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    m = read_manifest(spark, out_dir)
+def committed_buckets(spark: SparkSession, out_dir: str,
+                      unit: str = "ckpt_bucket") -> set[int]:
+    m = read_manifest(spark, out_dir, unit)
     if m is None:
         return set()
-    return {r["ckpt_bucket"] for r in m.select("ckpt_bucket").distinct().collect()}
+    return {r[unit] for r in m.select(unit).distinct().collect()}
 
 
 def bucket_metrics(routed: DataFrame, run_id: str, wall_sec: float) -> DataFrame:
-    """Per-bucket lineage/metrics rows computed from the routed frame
+    """Per-unit lineage/metrics rows computed from the routed frame
     (call on the *read-back* data so the ledger describes what is truly
-    on disk)."""
+    on disk), keyed by its commit-unit column."""
     key = F.concat_ws("|", "conv_id", F.col("turn_idx").cast("string"), "event_id")
-    return routed.groupBy("ckpt_bucket").agg(
+    return routed.groupBy(commit_unit(routed)).agg(
         F.lit(run_id).alias("run_id"),
         F.count(F.lit(1)).alias("routed_rows"),
         F.sum(F.when(F.col("sink_id") == "dead", 1).otherwise(0)).alias("dead_rows"),

@@ -14,11 +14,15 @@ Lifecycle (SURVEY §3.4) — one Spark application, shuffles annotated::
          → aggregate (two-stage salted counts)      shuffles #3a/#3b
 
 Resume: committed ckpt_buckets are skipped; the frozen template set is
-reloaded so routed output across runs is byte-consistent.
+reloaded so routed output across runs is byte-consistent.  The batch job
+runs ``route_commit`` once over all pending buckets; the streaming job
+(:func:`~logparser_spark.streaming.stream.run_streaming_pipeline`) runs
+``frozen_templates`` once and ``route_commit`` per epoch.
 """
 
 from __future__ import annotations
 
+import os
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -27,13 +31,15 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from logparser_spark.config import PipelineConfig
+from logparser_spark.drain import Cluster
 from logparser_spark.functions.hashing import bucket_expr
 from logparser_spark.operators.aggregate import sink_window_counts, turn_window_counts
 from logparser_spark.operators.assign import assign_templates
 from logparser_spark.operators.enrich import enrich
 from logparser_spark.operators.mine import mine_templates
-from logparser_spark.operators.route import route_write
+from logparser_spark.operators.route import commit_unit, route_write
 from logparser_spark.plans import manifest as M
+from logparser_spark.sources.lookups import lkp_role_df, lkp_tool_df
 from logparser_spark.strategies import check_strategy
 
 
@@ -46,12 +52,55 @@ class PipelineResult:
     buckets_skipped: list[int] = field(default_factory=list)
     routed_rows: int = 0
     wall_sec: float = 0.0
+    unit: str = "ckpt_bucket"  # commit-unit column of routed and the ledger
 
     @property
     def routed_path(self) -> str:
-        import os
-
         return os.path.join(self.out_dir, "routed")
+
+
+def frozen_templates(transcripts: DataFrame, out_dir: str, cfg: PipelineConfig,
+                     strategy: str = "drain", mine_sample_one_in: int = 1) -> list[Cluster]:
+    """The template set frozen in ``out_dir``: loaded from
+    ``_templates.json``, or mined from ``transcripts`` and saved there on
+    the first run.  A strategy other than the frozen one raises
+    ``ValueError`` before any Spark job."""
+    check_strategy(strategy)
+    frozen = M.frozen_strategy(out_dir)
+    if frozen is not None and frozen != strategy:
+        raise ValueError(
+            f"{out_dir} holds templates mined with strategy {frozen!r}; "
+            f"resume it with strategy={frozen!r}, not {strategy!r}"
+        )
+    clusters = M.load_templates(out_dir)
+    if clusters is None:
+        clusters = mine_templates(
+            transcripts, cfg, sample_one_in=mine_sample_one_in, strategy=strategy
+        )
+        M.save_templates(clusters, out_dir, strategy)
+        clusters = M.load_templates(out_dir)  # canonical (sorted) form
+    return clusters
+
+
+def route_commit(routed: DataFrame, out_dir: str, cfg: PipelineConfig, run_id: str,
+                 t0: float, units: list[int]) -> int:
+    """Write ``routed`` through ``route_write`` into ``<out>/routed``,
+    then commit ``units`` (values of its commit-unit column): one
+    read-back of their rows on disk feeds the ledger rows, so the ledger
+    describes what was written.  Returns the committed rows, observed on
+    the ledger write rather than re-counted."""
+    routed_path = os.path.join(out_dir, "routed")
+    route_write(routed, routed_path, cfg)
+    wall = time.time() - t0
+    on_disk = routed.sparkSession.read.format(cfg.sink_format).load(routed_path).filter(
+        F.col(commit_unit(routed)).isin([int(u) for u in units])
+    )
+    metrics = M.bucket_metrics(on_disk, run_id, wall)
+    obs = Observation()
+    M.write_manifest_rows(
+        metrics.observe(obs, F.sum("routed_rows").alias("routed_rows")), out_dir
+    )
+    return obs.get["routed_rows"] or 0
 
 
 def run_pipeline(
@@ -79,85 +128,46 @@ def run_pipeline(
     manifests then raise, simulating a mid-run death *after* partial
     output landed (SURVEY §5.2 resume test).
     """
-    import os
-
-    check_strategy(strategy)
-    frozen = M.frozen_strategy(out_dir)
-    if frozen is not None and frozen != strategy:
-        raise ValueError(
-            f"{out_dir} holds templates mined with strategy {frozen!r}; "
-            f"resume it with strategy={frozen!r}, not {strategy!r}"
-        )
     cfg = cfg or PipelineConfig()
     run_id = uuid.uuid4().hex[:12]
     t0 = time.time()
-    routed_path = os.path.join(out_dir, "routed")
-
+    clusters = frozen_templates(transcripts, out_dir, cfg, strategy, mine_sample_one_in)
     if lkp_role is None:
-        from logparser_spark.sources.lookups import lkp_role_df
-
         lkp_role = lkp_role_df(spark)
     if lkp_tool is None:
-        from logparser_spark.sources.lookups import lkp_tool_df
-
         lkp_tool = lkp_tool_df(spark)
 
     # -- resume bookkeeping -------------------------------------------------
     committed = M.committed_buckets(spark, out_dir)
-    all_buckets = set(range(cfg.checkpoint_buckets))
-    todo = sorted(all_buckets - committed)
+    todo = sorted(set(range(cfg.checkpoint_buckets)) - committed)
     result = PipelineResult(
         out_dir=out_dir,
         run_id=run_id,
-        n_templates=0,
+        n_templates=len(clusters),
         buckets_skipped=sorted(committed),
     )
     if not todo:
-        clusters = M.load_templates(out_dir) or []
-        result.n_templates = len(clusters)
-        result.routed_rows = spark.read.format(cfg.sink_format).load(routed_path).count()
+        result.routed_rows = (
+            spark.read.format(cfg.sink_format).load(result.routed_path).count()
+        )
         result.wall_sec = time.time() - t0
         return result
 
-    # -- templates: frozen on first run, reused on resume -------------------
-    clusters = M.load_templates(out_dir)
-    if clusters is None:
-        clusters = mine_templates(
-            transcripts, cfg, sample_one_in=mine_sample_one_in, strategy=strategy
-        )
-        M.save_templates(clusters, out_dir, strategy)
-        clusters = M.load_templates(out_dir)  # canonical (sorted) form
-    result.n_templates = len(clusters)
-
-    # -- parse → enrich → route over uncommitted buckets only ---------------
+    # -- parse → enrich → route over uncommitted buckets, then commit -------
     bucketed = transcripts.withColumn(
         "ckpt_bucket", bucket_expr("conv_id", cfg.checkpoint_buckets).cast("int")
     )
     pending = bucketed.filter(F.col("ckpt_bucket").isin([int(b) for b in todo]))
-
     assigned = assign_templates(pending, clusters, cfg.drain, strategy=strategy)
-    enriched = enrich(assigned, lkp_role, lkp_tool)
-    route_write(enriched, routed_path, cfg)
-
-    # -- commit manifests from read-back (ledger describes what's on disk) --
-    wall = time.time() - t0
     commit = todo if fail_after_buckets is None else todo[:fail_after_buckets]
-    on_disk = spark.read.format(cfg.sink_format).load(routed_path).filter(
-        F.col("ckpt_bucket").isin([int(b) for b in commit])
-    )
-    metrics = M.bucket_metrics(on_disk, run_id, wall)
-    # routed_rows comes with the manifest write, not from a re-scan
-    obs = Observation()
-    M.write_manifest_rows(
-        metrics.observe(obs, F.sum("routed_rows").alias("routed_rows")), out_dir
+    result.routed_rows = route_commit(
+        enrich(assigned, lkp_role, lkp_tool), out_dir, cfg, run_id, t0, commit
     )
     result.buckets_done = list(commit)
-    if fail_after_buckets is not None and len(commit) < len(todo):
+    if len(commit) < len(todo):
         raise RuntimeError(
             f"injected failure after committing {len(commit)}/{len(todo)} buckets"
         )
-
-    result.routed_rows = obs.get["routed_rows"] or 0
     result.wall_sec = time.time() - t0
     return result
 
@@ -169,5 +179,5 @@ def aggregates_from_routed(spark: SparkSession, result: PipelineResult,
     cfg = cfg or PipelineConfig()
     routed = spark.read.format(cfg.sink_format).load(result.routed_path)
     committed = set(result.buckets_done) | set(result.buckets_skipped)
-    routed = routed.filter(F.col("ckpt_bucket").isin([int(b) for b in committed]))
+    routed = routed.filter(F.col(result.unit).isin([int(b) for b in committed]))
     return sink_window_counts(routed, cfg), turn_window_counts(routed, cfg)

@@ -1,13 +1,3 @@
-from logparser_spark.streaming.stream import (
-    streaming_assign,
-    streaming_sink_counts,
-    streaming_route_write,
-    run_streaming_pipeline,
-)
+from logparser_spark.streaming.stream import run_streaming_pipeline
 
-__all__ = [
-    "streaming_assign",
-    "streaming_sink_counts",
-    "streaming_route_write",
-    "run_streaming_pipeline",
-]
+__all__ = ["run_streaming_pipeline"]

@@ -1,17 +1,16 @@
-"""Structured Streaming variant of the parse → enrich → aggregate path.
+"""Structured Streaming variant of the pipeline, plus streaming twins of
+the sketch, ranking, sessionization, curation and dedup operators.
 
 The reference is batch-only; this is the graft's continuous-ingest mode.
-The same operators compose unchanged onto a streaming DataFrame:
-
-* masking is stateless native ``regexp_replace``;
-* template *assignment* is the stateless broadcast matcher (templates are
-  mined offline in batch — the standard mine-offline/assign-online split);
-* aggregation is a watermarked event-time tumbling window, so late turns
-  beyond the watermark are dropped deterministically and state is bounded;
-* the routed fan-out is the batch ``route_write`` run once per epoch via
-  ``foreachBatch``: each micro-batch overwrites its own ``batch_id=<epoch>``
-  partitions, so with the checkpointLocation a replayed epoch rewrites
-  the same rows instead of appending duplicates.
+:func:`run_streaming_pipeline` is the batch job's body per epoch: the
+batch job's frozen templates, then ONE query whose ``foreachBatch``
+routes and commits each assigned, enriched micro-batch as commit unit
+``batch_id=<epoch>`` (``route_write``, one read-back, one ledger row;
+a ``foreachBatch`` frame is a batch plan, so AQE's REBALANCE applies).
+An epoch is committed iff its ledger row exists, so a replayed committed
+epoch is skipped and an uncommitted one overwrites its own partitions.
+The windowed counts are the batch ``sink_window_counts`` over the
+committed epochs: late turns are counted, not dropped behind a watermark.
 
 Tested with ``trigger(availableNow=True)`` over a parquet directory —
 same code path a Kafka/files source would take.
@@ -19,13 +18,24 @@ same code path a Kafka/files source would take.
 
 from __future__ import annotations
 
+import time
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from logparser_spark.config import PipelineConfig
-from logparser_spark.drain import Cluster
+from logparser_spark.functions.text import tokens_expr
 from logparser_spark.operators.assign import assign_templates
-from logparser_spark.operators.route import route_write, with_sink_id
+from logparser_spark.operators.enrich import enrich
+from logparser_spark.plans import manifest as M
+from logparser_spark.plans.pipeline import (
+    PipelineResult,
+    aggregates_from_routed,
+    frozen_templates,
+    route_commit,
+)
+from logparser_spark.sources.lookups import lkp_role_df, lkp_tool_df
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
@@ -34,6 +44,17 @@ TRANSCRIPT_SCHEMA = (
 
 def read_transcript_stream(spark: SparkSession, path: str) -> DataFrame:
     return spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(path)
+
+
+def _per_epoch(stream: DataFrame, fn, checkpoint: str):
+    """Start one availableNow query running ``fn(batch_df, epoch)`` on
+    each micro-batch."""
+    return (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def _require_utc(stream: DataFrame, name: str) -> None:
@@ -45,37 +66,6 @@ def _require_utc(stream: DataFrame, name: str) -> None:
             f"{name} needs spark.sql.session.timeZone=UTC (session has {tz!r}): "
             "its event-time timeouts would be off by the zone's offset"
         )
-
-
-def streaming_assign(
-    stream: DataFrame,
-    clusters: list[Cluster],
-    cfg: PipelineConfig | None = None,
-    strategy: str = "drain",
-) -> DataFrame:
-    """Assign with the matcher of the ``strategy`` that mined ``clusters``."""
-    cfg = cfg or PipelineConfig()
-    assigned = assign_templates(
-        stream, clusters, cfg.drain, with_params=False, strategy=strategy
-    )
-    return with_sink_id(assigned, cfg)
-
-
-def streaming_sink_counts(
-    routed: DataFrame,
-    cfg: PipelineConfig | None = None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Per-sink per-window template counts with late-data watermarking."""
-    cfg = cfg or PipelineConfig()
-    return (
-        routed.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", cfg.window_duration), "sink_id", "event_id")
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .select(
-            F.col("window.start").alias("win_start"), "sink_id", "event_id", "n_turns"
-        )
-    )
 
 
 def streaming_sessionize(
@@ -183,67 +173,57 @@ def streaming_sessionize(
     )
 
 
-def streaming_route_write(
-    routed: DataFrame,
-    path: str,
-    checkpoint_path: str,
-    cfg: PipelineConfig | None = None,
-    available_now: bool = True,
-):
-    """Streaming fan-out: each micro-batch runs the batch
-    ``operators.route.route_write`` via ``foreachBatch``, tagged
-    ``batch_id=<epoch>``, so rows land in ``batch_id=N/sink_id=S``.
-
-    A ``foreachBatch`` frame is a batch plan, so the write gets the batch
-    job's AQE REBALANCE (here on batch_id, sink_id).  Each epoch
-    dynamically overwrites only its own partitions, so a replayed epoch
-    (the at-least-once case ``foreachBatch`` documents) rewrites its rows
-    instead of appending duplicates; restarting from the same
-    ``checkpoint_path`` skips committed epochs.
-    """
-
-    def _route(batch_df: DataFrame, batch_id: int) -> None:
-        route_write(batch_df.withColumn("batch_id", F.lit(batch_id)), path, cfg)
-
-    writer = routed.writeStream.foreachBatch(_route).option(
-        "checkpointLocation", checkpoint_path
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def run_streaming_pipeline(
     spark: SparkSession,
     in_path: str,
     out: str,
-    clusters: list[Cluster],
     cfg: PipelineConfig | None = None,
     strategy: str = "drain",
-    available_now: bool = True,
-):
-    """Wire source → assign (with the ``strategy`` that mined
-    ``clusters``) → two queries: the routed fan-out into ``<out>/routed``
-    and the windowed per-sink counts into ``<out>/agg_sink_window``, with
-    checkpoints under ``<out>/_ckpt/``.  Returns both started queries
-    ``(route, agg)``; the caller awaits termination."""
+    mine_sample_one_in: int = 1,
+) -> PipelineResult:
+    """Run (or resume) the batch job's body per epoch over the parquet
+    directory ``in_path`` into ``out``: frozen templates, then one
+    availableNow query (checkpoint ``<out>/_ckpt``) that assigns and
+    enriches the stream and routes and commits each epoch, then
+    ``<out>/agg_sink_window`` over the committed epochs.
+
+    A strategy other than the frozen one raises ``ValueError`` before
+    any query starts.  ``routed_rows`` is summed from the ledger, so it
+    counts every committed epoch, this run's and earlier ones.
+    """
     cfg = cfg or PipelineConfig()
-    routed = streaming_assign(
-        read_transcript_stream(spark, in_path), clusters, cfg, strategy=strategy
+    run_id = uuid.uuid4().hex[:12]
+    t0 = time.time()
+    clusters = frozen_templates(
+        spark.read.schema(TRANSCRIPT_SCHEMA).parquet(in_path),
+        out, cfg, strategy, mine_sample_one_in,
     )
-    q_route = streaming_route_write(
-        routed, f"{out}/routed", f"{out}/_ckpt/route", cfg, available_now
+    committed = M.committed_buckets(spark, out, unit="batch_id")
+    result = PipelineResult(
+        out_dir=out, run_id=run_id, n_templates=len(clusters),
+        buckets_skipped=sorted(committed), unit="batch_id",
     )
-    writer = (
-        streaming_sink_counts(routed, cfg)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", f"{out}/agg_sink_window")
-        .option("checkpointLocation", f"{out}/_ckpt/agg")
+    assigned = assign_templates(
+        read_transcript_stream(spark, in_path), clusters, cfg.drain, strategy=strategy
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return q_route, writer.start()
+    routed = enrich(assigned, lkp_role_df(spark), lkp_tool_df(spark))
+
+    def _epoch(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id in committed:  # a replay of an epoch already committed
+            return
+        route_commit(
+            batch_df.withColumn("batch_id", F.lit(batch_id)),
+            out, cfg, run_id, t0, [batch_id],
+        )
+        result.buckets_done.append(batch_id)
+
+    _per_epoch(routed, _epoch, f"{out}/_ckpt").awaitTermination()
+    ledger = M.read_manifest(spark, out, unit="batch_id")
+    result.routed_rows = ledger.agg(F.sum("routed_rows")).first()[0] or 0
+    swc, _twc = aggregates_from_routed(spark, result, cfg)
+    swc.write.mode("overwrite").parquet(f"{out}/agg_sink_window")
+    result.wall_sec = time.time() - t0
+    return result
 
 
 def streaming_cms_cells(
@@ -331,7 +311,6 @@ def streaming_curation_write(
     text_col: str = "text",
     n: int = 5,
     min_overlap: int = 1,
-    available_now: bool = True,
 ):
     """Micro-batch curation: per-doc Gopher repetition stats + benchmark
     decontamination flags over a document STREAM.
@@ -370,12 +349,7 @@ def streaming_curation_write(
             f"{path}/batch_id={batch_id}"
         )
 
-    writer = docs_stream.writeStream.foreachBatch(_curate).option(
-        "checkpointLocation", f"{path}_ckpt"
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _per_epoch(docs_stream, _curate, f"{path}_ckpt")
 
 
 def streaming_quantile_cells(
@@ -481,7 +455,7 @@ def streaming_quantile_cells(
 
 def streaming_bm25_cells(
     stream: DataFrame,
-    query_terms: list[str],
+    queries: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     window_minutes: int = 60,
@@ -497,7 +471,11 @@ def streaming_bm25_cells(
     window-global, so unlike CMS/HLL this is not a per-key SQL
     aggregate: ``applyInPandasWithState`` keyed by (window, shard)
     accumulates INTEGER counts only — two scalars plus the matched
-    (doc, term, tf, dl) rows for documents sharing ≥ 1 seed term.
+    (doc, term, tf, dl) rows for documents sharing ≥ 1 seed term.  The
+    seed terms are the ``tokens_expr`` tokens of the static ``queries``
+    frame's ``query`` column, the tokenization the finalizer applies;
+    pass the SAME ``queries`` frame to ``bm25_topk_from_cells``, or its
+    terms missing here have no cells and silently score 0.
     Zero-overlap documents bump the two counters and are forgotten (the
     decontaminate lesson in streaming form): state ∝ the batch
     operator's post-join row count, not stream volume.  ``n_shards``
@@ -529,7 +507,12 @@ def streaming_bm25_cells(
 
     _require_utc(stream, "streaming_bm25_cells")
     win_ms = window_minutes * 60 * 1000
-    qset = frozenset(query_terms)
+    qset = frozenset(
+        r[0]
+        for r in queries.select(F.explode(tokens_expr("query")))
+        .distinct()
+        .collect()
+    )
     tok_re = re.compile(r"[^ \t\n\x0b\f\r]+")
     out_schema = (
         "win_start timestamp, shard int, doc_id string, term string, "
@@ -617,7 +600,6 @@ def streaming_incremental_dedup_write(
     path: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    available_now: bool = True,
     **dedup_kw,
 ):
     """Continuous-ingest near-dup admission control: each micro-batch is
@@ -676,9 +658,4 @@ def streaming_incremental_dedup_write(
         )
         admitted.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
 
-    writer = docs_stream.writeStream.foreachBatch(_admit).option(
-        "checkpointLocation", f"{path}_ckpt"
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _per_epoch(docs_stream, _admit, f"{path}_ckpt")

@@ -20,12 +20,9 @@ from logparser_spark.operators.evaluate import grouping_accuracy, grouping_accur
 from logparser_spark.operators.mine import mine_templates
 from logparser_spark.sources.logfile import compile_log_format, read_log_file
 from logparser_spark.sources.transcripts import transcripts_df
-from logparser_spark.streaming.stream import (
-    TRANSCRIPT_SCHEMA,
-    run_streaming_pipeline,
-    streaming_assign,
-    streaming_route_write,
-)
+from logparser_spark.plans.manifest import read_manifest
+from logparser_spark.plans.pipeline import aggregates_from_routed, run_pipeline
+from logparser_spark.streaming.stream import TRANSCRIPT_SCHEMA, run_streaming_pipeline
 
 LOG_FORMAT = "<Date> <Time> <Pid> <Level> <Component>: <Content>"
 LINES = [
@@ -358,137 +355,158 @@ def test_streaming_sessionize_closed_match_batch(spark):
         shutil.rmtree(d, ignore_errors=True)
 
 
-@pytest.fixture(scope="module")
-def streamed(spark, tmp_path_factory):
-    """Two deliveries through the shipped streaming wiring
-    (``run_streaming_pipeline``, as ``jobs/run_pipeline.py --stream`` runs
-    it): turns before ``turn_idx`` 250, then the rest, each ingested by
-    its own availableNow run from the same checkpoints (epochs 0 and 1).
-    Every ``DataFrameWriter.save`` the runs make is recorded with its
-    analyzed plan."""
+def _stream_two_deliveries(spark, d: str, strategy: str) -> SimpleNamespace:
+    """Two deliveries through the shipped streaming job
+    (``run_streaming_pipeline``, as ``jobs/run_pipeline.py --stream``
+    runs it): turns before ``turn_idx`` 250, then the rest, each ingested
+    by its own availableNow run (epochs 0 and 1).  Records every
+    ``DataFrameWriter.save`` with its analyzed plan, the run index of
+    every started query, and ``_templates.json`` after each run."""
     from pyspark.sql.readwriter import DataFrameWriter
+    from pyspark.sql.streaming import DataStreamWriter
 
-    cfg = PipelineConfig(num_partitions=4)
-    # 5 conversations → ~8 h of event time, so the 2 h watermark closes
-    # windows and the windowed counts are not vacuous
+    # 5 conversations → ~8 h of event time: many 1 h windows, and the
+    # last ones hold turns a 2 h watermark would never have closed
     tdf = transcripts_df(spark, 2000, 5, 0)
-    clusters = mine_templates(tdf, cfg)
-    deliveries = [tdf.filter("turn_idx < 250"), tdf.filter("turn_idx >= 250")]
-    d = str(tmp_path_factory.mktemp("stream"))
-    in_path, out = os.path.join(d, "in"), os.path.join(d, "out")
-    saves = []
-    save = DataFrameWriter.save
+    s = SimpleNamespace(
+        cfg=PipelineConfig(num_partitions=4), dir=d, strategy=strategy,
+        deliveries=[tdf.filter("turn_idx < 250"), tdf.filter("turn_idx >= 250")],
+        in_path=os.path.join(d, "in"), out=os.path.join(d, "out"),
+        saves=[], starts=[], results=[], frozen=[],
+    )
+    save, start = DataFrameWriter.save, DataStreamWriter.start
 
-    def spy(self, path=None, *args, **kwargs):
-        saves.append((path, self._df._jdf.queryExecution().analyzed().toString()))
+    def spy_save(self, path=None, *args, **kwargs):
+        s.saves.append((path, self._df._jdf.queryExecution().analyzed().toString()))
         return save(self, path, *args, **kwargs)
 
+    def spy_start(self, *args, **kwargs):
+        s.starts.append(len(s.results))
+        return start(self, *args, **kwargs)
+
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(DataFrameWriter, "save", spy)
-        for part in deliveries:
-            part.write.mode("append").parquet(in_path)
-            for q in run_streaming_pipeline(spark, in_path, out, clusters, cfg):
-                q.awaitTermination(180)
-    return SimpleNamespace(
-        cfg=cfg, clusters=clusters, deliveries=deliveries, dir=d,
-        in_path=in_path, out=out, saves=saves,
-    )
+        mp.setattr(DataFrameWriter, "save", spy_save)
+        mp.setattr(DataStreamWriter, "start", spy_start)
+        for part in s.deliveries:
+            part.write.mode("append").parquet(s.in_path)
+            s.results.append(run_streaming_pipeline(
+                spark, s.in_path, s.out, s.cfg, strategy=strategy))
+            with open(os.path.join(s.out, "_templates.json"), "rb") as f:
+                s.frozen.append(f.read())
+    return s
+
+
+@pytest.fixture(scope="module")
+def streamed(spark, tmp_path_factory):
+    return _stream_two_deliveries(spark, str(tmp_path_factory.mktemp("stream")), "drain")
+
+
+def _rows(df) -> Counter:  # repr: the rows hold array columns, unhashable as tuples
+    return Counter(map(repr, df.select(*sorted(df.columns)).collect()))
+
+
+def _assert_stream_equals_batch(spark, s) -> None:
+    """The streamed ``routed`` minus ``batch_id`` == the batch job's
+    ``routed`` minus ``ckpt_bucket`` row for row (parameters and enrich
+    columns included), and the stream's ``agg_sink_window`` == the batch
+    job's, with the batch run reusing the stream's frozen templates."""
+    b_out = os.path.join(s.dir, "bout")
+    os.makedirs(b_out)
+    shutil.copy(os.path.join(s.out, "_templates.json"), b_out)
+    static = spark.read.parquet(s.in_path)
+    result = run_pipeline(spark, static, b_out, s.cfg, strategy=s.strategy)
+    got = spark.read.parquet(f"{s.out}/routed").drop("batch_id")
+    assert {"parameters", "role_group", "tool_family"} <= set(got.columns)
+    assert _rows(got) == _rows(spark.read.parquet(f"{b_out}/routed").drop("ckpt_bucket"))
+    assert got.filter(F.size("parameters") > 0).count() > 0
+    assert s.results[-1].routed_rows == got.count() == 2000
+
+    swc, _twc = aggregates_from_routed(spark, result, s.cfg)
+    agg = spark.read.parquet(f"{s.out}/agg_sink_window")
+    assert _rows(agg) == _rows(swc)
+    # late data is counted: the window holding the last turn is there,
+    # though no watermark ever passed its end
+    last = static.agg(F.max("ts").alias("ts")).select(F.window("ts", "1 hour")["start"])
+    assert agg.agg(F.max("win_start")).first()[0] == last.first()[0]
 
 
 def test_streaming_pipeline_matches_batch(spark, streamed):
-    """Routed rows == batch route_write over the same input, and the
-    windowed counts == the batch counts of every window the final
-    watermark closed."""
-    from logparser_spark.operators.route import route_write
+    _assert_stream_equals_batch(spark, streamed)
 
+
+def test_streaming_pipeline_matches_batch_kernel_strategy(spark, tmp_path):
+    """The same for a batch-kernel strategy (fit once at the driver)."""
+    _assert_stream_equals_batch(spark, _stream_two_deliveries(spark, str(tmp_path), "iplom"))
+
+
+def test_streaming_templates_freeze_on_the_first_run(spark, streamed):
+    """The second delivery reuses the first run's template set byte for
+    byte; another strategy is refused before any query starts."""
     s = streamed
-    static = spark.read.parquet(s.in_path)
-    batch_routed = streaming_assign(static, s.clusters, s.cfg)
-    b_out = os.path.join(s.dir, "bout")
-    route_write(batch_routed, b_out, s.cfg)
-
-    got = spark.read.parquet(f"{s.out}/routed").drop("batch_id")
-    want = spark.read.parquet(b_out)
-    assert sorted(got.columns) == sorted(want.columns)
-    cols = sorted(got.columns)
-    assert got.select(*cols).exceptAll(want.select(*cols)).count() == 0
-    assert want.select(*cols).exceptAll(got.select(*cols)).count() == 0
-
-    # append mode emits a 1 h window once the watermark (max ts - 2 h)
-    # passes its end
-    max_ts = static.agg(F.max("ts")).first()[0]
-    closed = (
-        batch_routed.groupBy(
-            F.window("ts", s.cfg.window_duration)["start"].alias("win_start"),
-            "sink_id",
-            "event_id",
-        )
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .filter(F.col("win_start") + F.expr("INTERVAL 3 HOURS") <= F.lit(max_ts))
-    )
-    agg = spark.read.parquet(f"{s.out}/agg_sink_window")
-    assert agg.count() > 0
-    assert agg.exceptAll(closed.select(*agg.columns)).count() == 0
-    assert closed.select(*agg.columns).exceptAll(agg).count() == 0
+    assert s.frozen[0] == s.frozen[1]
+    with pytest.raises(ValueError, match="strategy 'drain'"):
+        run_streaming_pipeline(spark, s.in_path, s.out, s.cfg, strategy="spell")
+    assert not spark.streams.active
 
 
 def test_streaming_route_write_matches_batch_and_resumes(spark, streamed):
-    """Each epoch lands in its own ``batch_id=N/sink_id=S`` dirs and holds
-    exactly its delivery's turns (the second run resumed from the
-    checkpoint and re-ingested nothing); replaying the last epoch, as
-    after a crash between write and commit, rewrites its partitions and
-    leaves the rows unchanged."""
+    """Each epoch lands in its own ``batch_id=N/sink_id=S`` dirs with one
+    ledger row and holds exactly its delivery's turns (the second run
+    re-ingested nothing).  A replayed last epoch is skipped when its
+    ledger row exists, and rewritten with the same rows when not."""
+    import glob
+
     s = streamed
     routed = f"{s.out}/routed"
 
     def layout():
         return {
-            e: {
-                n: set(os.listdir(f"{routed}/{e}/{n}"))
-                for n in os.listdir(f"{routed}/{e}")
-                if n.startswith("sink_id=")
-            }
-            for e in os.listdir(routed)
-            if e.startswith("batch_id=")
+            f"{e}/{n}": set(os.listdir(f"{routed}/{e}/{n}"))
+            for e in os.listdir(routed) if e.startswith("batch_id=")
+            for n in os.listdir(f"{routed}/{e}") if n.startswith("sink_id=")
         }
 
-    def rows():  # repr: the rows hold array columns, unhashable as tuples
-        return Counter(map(repr, spark.read.parquet(routed).collect()))
+    def ledger():
+        m = read_manifest(spark, s.out, unit="batch_id")
+        return sorted(map(tuple, m.select("batch_id", "routed_rows").collect()))
 
-    before = layout()
-    assert sorted(before) == ["batch_id=0", "batch_id=1"]
-    cols = ["conv_id", "turn_idx", "sink_id"]
-    got = spark.read.parquet(routed).select("batch_id", *cols).collect()
-    for epoch, part in enumerate(s.deliveries):
-        want = sorted(
-            map(tuple, streaming_assign(part, s.clusters, s.cfg).select(*cols).collect())
-        )
-        assert sorted(tuple(r[1:]) for r in got if r[0] == epoch) == want
-        assert set(before[f"batch_id={epoch}"]) == {f"sink_id={r[2]}" for r in want}
+    def replay_last_epoch():
+        os.remove(f"{s.out}/_ckpt/commits/1")
+        # the local checksum FS keeps a .crc sidecar; a stale one makes
+        # the replayed commit's rename fail
+        os.remove(f"{s.out}/_ckpt/commits/.1.crc")
+        return run_streaming_pipeline(spark, s.in_path, s.out, s.cfg)
 
-    n_before = rows()
-    ckpt = f"{s.out}/_ckpt/route"
-    os.remove(os.path.join(ckpt, "commits", "1"))
-    # the local checksum FS keeps a .crc sidecar; a stale one makes the
-    # replayed commit's rename fail
-    os.remove(os.path.join(ckpt, "commits", ".1.crc"))
-    stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(s.in_path)
-    streaming_route_write(
-        streaming_assign(stream, s.clusters, s.cfg), routed, ckpt, s.cfg
-    ).awaitTermination(180)
+    keys = ["batch_id", "conv_id", "turn_idx"]
+    want = [(e, *r) for e, p in enumerate(s.deliveries) for r in p.select(*keys[1:]).collect()]
+    assert sorted(map(tuple, spark.read.parquet(routed).select(*keys).collect())) == sorted(want)
+    assert ledger() == [(0, s.deliveries[0].count()), (1, s.deliveries[1].count())]
+    assert [r.buckets_done for r in s.results] == [[0], [1]]
+
+    before, rows, ledger_before = layout(), _rows(spark.read.parquet(routed)), ledger()
+    r = replay_last_epoch()
+    assert (r.buckets_done, r.buckets_skipped) == ([], [0, 1])
+    assert (layout(), _rows(spark.read.parquet(routed)), ledger()) == (before, rows, ledger_before)
+
+    [f] = [f for f in glob.glob(f"{s.out}/_manifest/*.parquet")
+           if pd.read_parquet(f)["batch_id"].tolist() == [1]]
+    os.remove(f)
+    os.remove(os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc"))
+    assert replay_last_epoch().buckets_done == [1]
     after = layout()
-    assert after["batch_id=0"] == before["batch_id=0"]
-    assert after["batch_id=1"].keys() == before["batch_id=1"].keys()
-    # the replayed epoch really ran: its files were replaced, not added to
-    for sink, files in after["batch_id=1"].items():
-        assert files.isdisjoint(before["batch_id=1"][sink]), sink
-    assert rows() == n_before
+    assert after.keys() == before.keys()
+    for d, files in after.items():
+        # the replayed epoch really ran: its files were replaced, not added to
+        assert files == before[d] if d.startswith("batch_id=0") else files.isdisjoint(before[d])
+    assert (_rows(spark.read.parquet(routed)), ledger()) == (rows, ledger_before)
 
 
 def test_streaming_route_write_plans_rebalance(streamed):
-    """Every micro-batch writes through route_write: one save per epoch
-    into ``<out>/routed``, planned as an AQE REBALANCE on
-    (batch_id, sink_id), not a fixed hash repartition."""
+    """Each run starts one streaming query, and every micro-batch writes
+    through route_write: one save per epoch into ``<out>/routed``,
+    planned as an AQE REBALANCE on (batch_id, sink_id), not a fixed hash
+    repartition."""
+    assert streamed.starts == [0, 1]
     assert [p for p, _ in streamed.saves] == [f"{streamed.out}/routed"] * 2
     for _, plan in streamed.saves:
         assert re.search(r"RebalancePartitions \[batch_id#\d+, sink_id#\d+\]", plan), plan
@@ -746,9 +764,6 @@ def test_streaming_bm25_cells_equal_batch_topk(spark):
         [("q_cache", "cache miss shard"), ("q_err", "error block terminating")],
         "query_id string, query string",
     )
-    q_terms = sorted(
-        {t for r in queries.collect() for t in r["query"].split()}
-    )
     tdf = transcripts_df(spark, 3000, 30, 0).withColumn(
         "turn_uid", F.concat_ws(":", "conv_id", "turn_idx")
     )
@@ -761,7 +776,7 @@ def test_streaming_bm25_cells_equal_batch_topk(spark):
             q = (
                 streaming_bm25_cells(
                     spark.readStream.schema(tdf.schema).parquet(in_path),
-                    q_terms,
+                    queries,
                     id_col="turn_uid",
                     text_col="text",
                     window_minutes=60,
@@ -954,6 +969,7 @@ def test_stateful_twins_refuse_a_non_utc_session(spark, tmp_path):
     )
 
     stream = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(str(tmp_path))
+    queries = spark.createDataFrame([("q", "cache")], "query_id string, query string")
     old = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
@@ -962,7 +978,7 @@ def test_stateful_twins_refuse_a_non_utc_session(spark, tmp_path):
         with pytest.raises(ValueError, match="timeZone=UTC"):
             streaming_quantile_cells(stream, ["role"], "turn_idx", "conv_id")
         with pytest.raises(ValueError, match="timeZone=UTC"):
-            streaming_bm25_cells(stream, ["cache"], id_col="conv_id")
+            streaming_bm25_cells(stream, queries, id_col="conv_id")
     finally:
         spark.conf.set("spark.sql.session.timeZone", old)
     assert not spark.streams.active

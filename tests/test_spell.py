@@ -126,6 +126,7 @@ def test_streaming_assign_uses_the_mining_strategy(spark, tdf, tmp_path):
     template's token count, so it would leave the long-name turns dead."""
     from pyspark.sql import functions as F
 
+    from logparser_spark.plans.manifest import frozen_strategy, load_templates
     from logparser_spark.streaming.stream import run_streaming_pipeline
 
     cfg = PipelineConfig(num_partitions=8)
@@ -134,11 +135,11 @@ def test_streaming_assign_uses_the_mining_strategy(spark, tdf, tmp_path):
     turns = tdf.withColumn(
         "text", F.when(F.col("turn_idx") % 5 == 0, login).otherwise(F.col("text"))
     )
-    mined = mine_templates(turns, cfg, strategy="spell")
     in_path, out = str(tmp_path / "in"), str(tmp_path / "out")
     turns.write.parquet(in_path)
-    for q in run_streaming_pipeline(spark, in_path, out, mined, cfg, strategy="spell"):
-        q.awaitTermination(180)
+    run_streaming_pipeline(spark, in_path, out, cfg, strategy="spell")
+    assert frozen_strategy(out) == "spell"
+    mined = load_templates(out)
     cols = ["conv_id", "turn_idx", "event_id", "matched"]
     got = spark.read.parquet(f"{out}/routed").select(*cols)
     want = assign_templates(turns, mined, cfg.drain, strategy="spell").select(*cols)
